@@ -15,12 +15,12 @@ import org.apache.spark.sql.SparkSession
   *      (an artifact left by an earlier run with a matching
   *      fingerprint would otherwise be reused by the pre-build pass,
   *      which would be result caching across runs, not optimization).
-  *   1. PRE-BUILD pass: one full registry execution with
-  *      `-Dgraft.artifacts.lazy=true`. Each materialized artifact
-  *      (suffix ranks, IVF index, NN-descent graph, media table, …)
-  *      is built exactly once here — the skip-if-complete guard
-  *      (`Artifacts.skipBuild`) turns every later force-build into a
-  *      no-op — and the same pass warms JIT/codegen/parquet footers.
+  *   1. PRE-BUILD pass: one full registry execution. Each
+  *      materialized artifact (suffix ranks, IVF index, NN-descent
+  *      graph, media table, …) is built exactly once here — artifact
+  *      builds are skip-if-complete (`graft.operators.Artifacts`), so
+  *      every later `materialize` is a no-op — and the same pass warms
+  *      JIT/codegen/parquet footers.
   *      Its wall time is reported as `build_sec`, NOT folded into
   *      `value`: the timed reps measure query cost, the build phase
   *      prices construction honestly but once. (Round 12 measured a
@@ -91,16 +91,7 @@ object Bench {
     // every invocation computes from the parquet inputs: drop any
     // artifact a previous run left behind (fingerprint-keyed reuse
     // across invocations would be cross-run result caching)
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      f.delete(); ()
-    }
-    rmTree(new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_artifacts"))
-    // artifact builds happen ONCE (pre-build pass); every later
-    // force-materialize of a complete artifact is a no-op.
-    System.setProperty("graft.artifacts.lazy", "true")
+    graft.operators.Artifacts.wipe()
     // SIGTERM (driver timeout) → write/print whatever completed.
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       terminating = true

@@ -17,8 +17,9 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * and small stages. Cache hygiene moves to batch boundaries:
   * `clearCache()` mid-batch would drop a sibling query's persisted
   * intermediates mid-execution, so the cache is cleared only after a
-  * whole batch completes (every artifact builder is `synchronized`,
-  * so two queries racing to materialize the same artifact serialize). */
+  * whole batch completes (artifact builds take a lock per artifact
+  * root and skip a complete artifact, so two queries racing to
+  * materialize the same artifact build it once). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [queryName...] — trailing names restrict the
@@ -29,11 +30,6 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(4)
-    // Verify measures CORRECTNESS, not build cost: a force-materialize
-    // of an already-complete artifact becomes a no-op (see
-    // Artifacts.skipBuild) — under concurrent batches an overwrite
-    // would delete parquet files out from under a sibling query.
-    System.setProperty("graft.artifacts.lazy", "true")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions._
   * inline — its DuckDB oracle still replays the artifact build AND
   * the identical append steps from `embeddings`, and
   * [[AppendGraphArtifactSpec]] pins artifact-vs-direct row identity.
-  * Parameters pinned in the path; keyed by the embeddings fingerprint
-  * like the base graph it extends. */
+  * Parameters are pinned in the path. */
 object AppendGraphArtifact {
 
   val Beam = 4
@@ -40,11 +39,6 @@ object AppendGraphArtifact {
   val LocalRounds = 1
   /** Batch size: the append batch is the last `BatchN` vectors. */
   val BatchN = 8L
-
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "embeddings", "nndappend")}_b${Beam}_h${Hops}_l${LocalRounds}_n$BatchN"
-
-  private def parts = Seq("edges", "meta")
 
   /** The exact inputs the inline query used: the corpus, the batch
     * boundary m = max(vec_id) − (BatchN − 1), and the base graph
@@ -60,41 +54,29 @@ object AppendGraphArtifact {
     (emb, m, baseE)
   }
 
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, parts)) return p
-    val (emb, m, baseE) = inputs(spark, dir)
+  private val spec = Artifact("nndappend", "embeddings",
+      s"_b${Beam}_h${Hops}_l${LocalRounds}_n$BatchN",
+      Seq("edges", "meta")) { b =>
+    val (emb, m, baseE) = inputs(b.spark, b.dir)
     val res = Similarity.nnDescentAppend(emb, baseE, m,
       k = NndGraphArtifact.K, beam = Beam, hops = Hops, entry = 0L,
       localRounds = LocalRounds)
     try {
-      res.write.mode("overwrite").parquet(s"$p/edges")
-      spark.range(1).select(lit(m).as("m"))
-        .write.mode("overwrite").parquet(s"$p/meta")
+      b.write("edges", res)
+      b.write("meta", b.spark.range(1).select(lit(m).as("m")))
     } finally res.unpersist()
-    p
   }
 
-  private def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, parts)) materialize(spark, dir)
-    p
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
 
   /** The integrated post-append graph `(qid, vec_id, cos, rnk)`. */
   def edges(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/edges")
-
-  // m is one stored long — memoized per artifact path so consumers
-  // don't pay even the 1-row meta scan per execution (the fingerprint
-  // in the path keys the memo exactly like the relation cache).
-  private val mCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
+    spec.read(spark, dir, "edges")
 
   /** The batch boundary: appended vectors are `vec_id >= m`. */
-  def batchMinId(spark: SparkSession, dir: String): Long = {
-    val p = ensure(spark, dir)
-    mCache.computeIfAbsent((spark, p),
-      _ => Artifacts.read(spark, s"$p/meta").head().getLong(0)).longValue()
-  }
+  def batchMinId(spark: SparkSession, dir: String): Long =
+    spec.first(spark, dir, "meta").getLong(0)
 }

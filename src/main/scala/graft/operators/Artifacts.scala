@@ -1,81 +1,161 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 
-/** Shared plumbing for materialized layout artifacts (derived
-  * structures written once as parquet and consumed by many registry
-  * queries — the co-occurrence edge list, the IVF index). Artifacts
-  * live under the JVM temp dir, keyed by source directory AND a
-  * size/mtime fingerprint of the table they derive from, so a
-  * regenerated dataset can never serve a stale artifact. */
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
+/** A materialized layout artifact, declared: a derived structure
+  * written once as parquet `parts` under one root and consumed by many
+  * registry queries (the co-occurrence edge list, the IVF index, …).
+  * The root is keyed by the source directory, a fingerprint of
+  * `sourceTable` (see [[Artifacts.path]]) and `keySuffix`, which pins
+  * the build parameters — so neither a regenerated dataset nor a
+  * parameter change can ever serve a stale artifact.
+  *
+  * `build` derives the parts from the source directory and writes each
+  * one through [[Artifact.Build.write]]. [[Artifacts]] runs it at most
+  * once per root: every accessor and `materialize` is
+  * skip-if-complete, and the first reader builds. A build may read
+  * other artifacts (the chained IVF → kNN-edges → NN-descent tiers);
+  * roots form a DAG, so the per-root locks cannot deadlock. */
+final case class Artifact(tag: String, sourceTable: String, keySuffix: String,
+    parts: Seq[String])(build: Artifact.Build => Unit) {
+
+  def path(dir: String): String =
+    Artifacts.path(dir, sourceTable, tag) + keySuffix
+
+  /** Build the artifact unless it is complete; returns its root. */
+  def materialize(spark: SparkSession, dir: String): String =
+    Artifacts.ensure(spark, dir, this)
+
+  /** One part as a (memoized) parquet relation, building first if
+    * absent. */
+  def read(spark: SparkSession, dir: String, part: String): DataFrame =
+    Artifacts.read(spark, s"${materialize(spark, dir)}/$part")
+
+  /** The first row of a one-row part, memoized per session and root. */
+  def first(spark: SparkSession, dir: String, part: String): Row =
+    Artifacts.first(spark, s"${materialize(spark, dir)}/$part")
+
+  private[operators] def run(b: Artifact.Build): Unit = build(b)
+}
+
+object Artifact {
+
+  /** What a build sees: the session and the source directory; parts
+    * go to the artifact's root. */
+  final class Build(val spark: SparkSession, val dir: String,
+      root: String) {
+
+    /** (Over)write one part, optionally partitioned by columns. */
+    def write(part: String, df: DataFrame, partitionBy: String*): Unit =
+      df.write.mode("overwrite").partitionBy(partitionBy: _*)
+        .parquet(s"$root/$part")
+
+    /** Read back a part this build has already written. */
+    def read(part: String): DataFrame =
+      Artifacts.read(spark, s"$root/$part")
+  }
+}
+
+/** The one runtime behind every [[Artifact]]: fingerprinted roots,
+  * one lock per root, skip-if-complete builds, and the relation cache
+  * consumers read through. */
 object Artifacts {
 
-  // Memoized RESOLVED relation per (session, artifact part path) —
-  // round 13, the graft.Tables treatment applied to artifact reads:
+  /** Directory holding every artifact root. */
+  val Root: String = s"${System.getProperty("java.io.tmpdir")}/graft_artifacts"
+
+  /** Written at the root after a build returns: an artifact whose build
+    * threw (or is still running) has no marker, so it is incomplete
+    * and the next reader builds it again. */
+  private val Marker = "_COMPLETE"
+
+  // Memoized RESOLVED relation per (session, artifact part path):
   // `spark.read.parquet` re-lists the directory and re-reads the
-  // parquet footer on every call, and artifact consumers re-call their
-  // accessor per branch, so each consumer query paid 1-3 driver-side
-  // metadata jobs per execution. Metadata reuse only: every action
-  // still scans the parquet data. `invalidate` drops a root's entries
-  // after a rebuild overwrites its files (a cached FileIndex would
-  // otherwise point at deleted part files).
+  // parquet footer on every call, and consumers re-call their accessor
+  // per branch. Metadata reuse only: every action still scans the
+  // parquet data.
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val rowCache =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Row]()
+  private val locks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   def read(spark: SparkSession, path: String): DataFrame =
-    relCache.computeIfAbsent((spark, path),
-      _ => spark.read.parquet(path))
+    relCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
 
-  /** Drop every cached relation under `root` — call after a
-    * `materialize` has (re)written artifact parts there. */
+  private[operators] def first(spark: SparkSession, path: String): Row =
+    rowCache.computeIfAbsent((spark, path), _ => read(spark, path).head())
+
+  /** Drop every cached relation under `root` (a cached FileIndex would
+    * otherwise point at part files a rebuild deletes). */
   def invalidate(root: String): Unit = {
-    val it = relCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._2.startsWith(root)) it.remove()
+    relCache.keySet.removeIf(_._2.startsWith(root))
+    rowCache.keySet.removeIf(_._2.startsWith(root))
   }
 
-  private def fingerprint(dir: String, table: String): String = {
-    def walk(f: java.io.File): (Long, Long) =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty)
-          .map(walk).foldLeft((0L, 0L)) { case ((s, m), (s2, m2)) =>
-            (s + s2, math.max(m, m2))
-          }
-      else (f.length(), f.lastModified())
-    val (sz, mt) = walk(new java.io.File(dir, s"$table.parquet"))
-    java.lang.Long.toHexString(sz ^ java.lang.Long.rotateLeft(mt, 21))
+  /** Delete `root` (default: every artifact) and its cached relations;
+    * the next read rebuilds. */
+  def wipe(root: String = Root): Unit = withLock(root) {
+    invalidate(root)
+    val top = Paths.get(root)
+    if (Files.exists(top)) Using.resource(Files.walk(top)) { s =>
+      s.iterator.asScala.toSeq.reverse.foreach(Files.delete)
+    }
+  }
+
+  /** Run `f` holding `root`'s lock — the lock every build of that root
+    * takes. */
+  private[operators] def withLock[T](root: String)(f: => T): T =
+    locks.computeIfAbsent(root, _ => new Object).synchronized(f)
+
+  /** True iff a build of `root` has returned. */
+  def complete(root: String): Boolean = new java.io.File(root, Marker).exists()
+
+  /** Build `a` for `dir` unless complete; returns its root. The
+    * marker is checked again under the root's lock, so concurrent
+    * readers build once. */
+  private[operators] def ensure(spark: SparkSession, dir: String,
+      a: Artifact): String = {
+    val root = a.path(dir)
+    if (!complete(root)) withLock(root) {
+      if (!complete(root)) {
+        invalidate(root)
+        a.run(new Artifact.Build(spark, dir, root))
+        Files.createDirectories(Paths.get(root))
+        new java.io.File(root, Marker).createNewFile()
+      }
+    }
+    root
+  }
+
+  /** Hash of the sorted (relative path, size, mtime) triples of every
+    * file under `<dir>/<table>.parquet`. */
+  private[operators] def fingerprint(dir: String, table: String): String = {
+    val base = Paths.get(dir, s"$table.parquet")
+    val triples =
+      if (!Files.exists(base)) Seq.empty[String]
+      else Using.resource(Files.walk(base)) { s =>
+        s.iterator.asScala.filter(Files.isRegularFile(_)).map { f: Path =>
+          s"${base.relativize(f)}\t${Files.size(f)}\t" +
+            Files.getLastModifiedTime(f).toMillis
+        }.toSeq.sorted
+      }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    triples.foreach(t => md.update(s"$t\n".getBytes(UTF_8)))
+    md.digest().take(8).map(b => f"${b & 0xff}%02x").mkString
   }
 
   /** Root directory for one artifact: `<tag>` names the artifact
     * family, `table` is the source table whose fingerprint keys it. */
   def path(dir: String, table: String, tag: String): String = {
     val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_artifacts/${tag}_${safe}_${fingerprint(dir, table)}"
-  }
-
-  /** True iff every named part of the artifact has a parquet `_SUCCESS`
-    * marker under `root`. */
-  def complete(root: String, parts: Seq[String]): Boolean =
-    parts.forall(s => new java.io.File(s"$root/$s", "_SUCCESS").exists())
-
-  /** Force-materialize guard for CONCURRENT harnesses. The registered
-    * build-step queries call `materialize` unconditionally so the
-    * bench prices construction honestly — but under Verify's
-    * concurrent batches, an `overwrite` of a complete artifact deletes
-    * parquet files out from under a sibling query mid-scan
-    * (FILE_NOT_EXIST, or worse, a silent partial read). Verify sets
-    * `-Dgraft.artifacts.lazy=true` (it measures correctness, not build
-    * cost), turning a force-build of an already-complete artifact into
-    * a no-op; the fingerprint in [[path]] still guarantees a stale
-    * artifact can never be served. Every `materialize` checks this
-    * INSIDE its `synchronized` block, so the complete() read cannot
-    * race a concurrent build of the same artifact. */
-  def skipBuild(root: String, parts: Seq[String]): Boolean = {
-    val skip = sys.props.get("graft.artifacts.lazy").contains("true") &&
-      complete(root, parts)
-    // a false return means the caller is about to (re)build under
-    // `root` — drop any memoized relations there so no reader keeps a
-    // FileIndex over files the overwrite is about to delete
-    if (!skip) invalidate(root)
-    skip
+    s"$Root/${tag}_${safe}_${fingerprint(dir, table)}"
   }
 }

@@ -26,11 +26,9 @@ import org.apache.spark.sql.functions._
   * walk is tie-broken on (cos desc, node) everywhere), so consumers
   * read byte-identical values to what they previously computed inline;
   * the DuckDB oracles still replay the full hop expansion from
-  * `embeddings`. Keyed by source dir + embeddings fingerprint (the
-  * NN-descent graph it walks is keyed the same way), parameters pinned
-  * in the path. At 100 TB this is the production posture: a frozen
-  * index's fixed evaluation walk is executed once, audits read the
-  * trace. */
+  * `embeddings`. Parameters are pinned in the path. At 100 TB this is
+  * the production posture: a frozen index's fixed evaluation walk is
+  * executed once, audits read the trace. */
 object BeamWalkArtifact {
 
   val QMin = 8L
@@ -39,38 +37,31 @@ object BeamWalkArtifact {
   val Hops = 4
   val Entry = 0L
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "embeddings", "beamwalk")}_q${QMin}_${QMax}_b${Beam}_h${Hops}_e$Entry"
-
-  private def parts = Seq("seen", "cost")
-
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, parts)) return p
+  private val spec = Artifact("beamwalk", "embeddings",
+      s"_q${QMin}_${QMax}_b${Beam}_h${Hops}_e$Entry",
+      Seq("seen", "cost")) { b =>
     val (seen, cost) = Similarity.beamWalkTrace(
-      graft.Tables.embeddings(spark, dir)
+      graft.Tables.embeddings(b.spark, b.dir)
         .select(col("vec_id"), col("embedding")),
-      NndGraphArtifact.edges(spark, dir)
+      NndGraphArtifact.edges(b.spark, b.dir)
         .select(col("qid"), col("vec_id")),
       QMin, QMax, Beam, Hops, Entry)
     try {
-      seen.write.mode("overwrite").parquet(s"$p/seen")
-      cost.write.mode("overwrite").parquet(s"$p/cost")
+      b.write("seen", seen)
+      b.write("cost", cost)
     } finally seen.unpersist()
-    p
   }
 
-  private def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, parts)) materialize(spark, dir)
-    p
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
 
   /** The scored distinct seen set `(qid, vec_id, cos)`. */
   def seen(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/seen")
+    spec.read(spark, dir, "seen")
 
   /** The per-query scored-candidate count `(qid, cand_scored)`. */
   def cost(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/cost")
+    spec.read(spark, dir, "cost")
 }

@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
   * winner — iteration count is the plannable knob, corpus size never
   * re-enters. Rounds materialize eagerly (persist + count, previous
   * round released) so the plan stays shallow at any round count.
-  *
-  * Keyed by the documents fingerprint ([[Artifacts]]); round count
-  * pinned in the path. */
+  * The round count is pinned in the path. */
 object BpeVocabArtifact {
 
   // round 13: build-time (batch-only) lineage cut — eager
@@ -35,11 +33,6 @@ object BpeVocabArtifact {
   /** Merge rounds — the learned-vocabulary size knob. */
   val Rounds = 8
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "bpevocab")}_r$Rounds"
-
-  private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
   private def pairCounts(r: DataFrame): DataFrame = r
     .select(col("f"), split(expr("trim(repr)"), "  ").as("tl"))
     .filter(size(col("tl")) >= 2)
@@ -48,12 +41,9 @@ object BpeVocabArtifact {
       .as("pair"))
     .groupBy(col("pair")).agg(sum(col("f")).as("cnt"))
 
-  /** Force a (re)build — the registered build step always pays this
-    * cost so the bench prices it honestly. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("merges", "reprs"))) return p
-    val words = graft.Tables.documents(spark, dir)
+  private val spec = Artifact("bpevocab", "documents", s"_r$Rounds",
+      Seq("merges", "reprs")) { b =>
+    val words = graft.Tables.documents(b.spark, b.dir)
       .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -75,26 +65,22 @@ object BpeVocabArtifact {
           "replace(repr, ' ' || replace(mp, ' ', '  ') || ' ', ' ' || replace(mp, ' ', '') || ' ')")
           .as("repr"), col("f")))
     }
-    tops.reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$p/merges")
-    repr.select(col("w"), col("repr"), col("f"),
-        size(split(expr("trim(repr)"), "  ")).cast("long").as("n_symbols"))
-      .write.mode("overwrite").parquet(s"$p/reprs")
-    p
+    b.write("merges", tops.reduce(_ unionAll _))
+    b.write("reprs", repr.select(col("w"), col("repr"), col("f"),
+      size(split(expr("trim(repr)"), "  ")).cast("long").as("n_symbols")))
   }
 
-  private def part(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("merges", "reprs"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/$name")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
 
   /** The learned merge table `(merge_rank, pair, merged, cnt)`. */
   def merges(spark: SparkSession, dir: String): DataFrame =
-    part(spark, dir, "merges")
+    spec.read(spark, dir, "merges")
 
   /** Every corpus word's decomposition under the learned rules:
     * `(w, repr, f, n_symbols)`. */
   def reprs(spark: SparkSession, dir: String): DataFrame =
-    part(spark, dir, "reprs")
+    spec.read(spark, dir, "reprs")
 }

@@ -8,35 +8,28 @@ import graft.Tables
   * `(da, db, jaccard)` a dedup pipeline's FIRST job emits.
   * `q_dedup_jaccard_capped` is the registered build step; the
   * cluster-label build ([[ClusterArtifact]]) consumes the written
-  * pairs instead of re-running the shingle-index self-join. Keyed by
-  * a size/mtime fingerprint of `documents.parquet` plus the
-  * similarity parameters (see [[Artifacts]]). */
+  * pairs instead of re-running the shingle-index self-join. The
+  * similarity parameters are pinned in the path. */
 object PairsArtifact {
 
-  def path(dir: String, threshold: Double, maxDf: Int): String = {
-    val t = math.round(threshold * 100)
-    s"${Artifacts.path(dir, "documents", "ndpairs")}_t${t}_d$maxDf"
-  }
+  private def spec(threshold: Double, maxDf: Int) =
+    Artifact("ndpairs", "documents",
+        s"_t${math.round(threshold * 100)}_d$maxDf", Seq("pairs")) { b =>
+      b.write("pairs", Dedup.jaccardPairs(Tables.documents(b.spark, b.dir),
+        threshold, maxDf = Some(maxDf)))
+    }
+
+  def path(dir: String, threshold: Double, maxDf: Int): String =
+    spec(threshold, maxDf).path(dir)
 
   def materialize(spark: SparkSession, dir: String,
-                  threshold: Double, maxDf: Int): String = synchronized {
-    val p = path(dir, threshold, maxDf)
-    if (Artifacts.skipBuild(p, Seq("pairs"))) return p
-    Dedup.jaccardPairs(Tables.documents(spark, dir), threshold,
-        maxDf = Some(maxDf))
-      .write.mode("overwrite").parquet(s"$p/pairs")
-    p
-  }
+                  threshold: Double, maxDf: Int): String =
+    spec(threshold, maxDf).materialize(spark, dir)
 
-  /** Read the pair list `(da, db, jaccard)`, building it first if
-    * absent. */
+  /** The pair list `(da, db, jaccard)`. */
   def pairs(spark: SparkSession, dir: String,
-            threshold: Double, maxDf: Int): DataFrame = {
-    val p = path(dir, threshold, maxDf)
-    if (!Artifacts.complete(p, Seq("pairs")))
-      materialize(spark, dir, threshold, maxDf)
-    Artifacts.read(spark, s"$p/pairs")
-  }
+            threshold: Double, maxDf: Int): DataFrame =
+    spec(threshold, maxDf).read(spark, dir, "pairs")
 }
 
 /** Materialized dedup cluster-label table: connected components over
@@ -47,39 +40,31 @@ object PairsArtifact {
   * cluster-size report) is a cheap join against the label table.
   * `q_dedup_clusters` is the registered build step, consuming the
   * [[PairsArtifact]] pair list — the dedup pipeline's real job chain
-  * (pairs → clusters → filter), each stage materialized. Keyed by a
-  * size/mtime fingerprint of `documents.parquet` plus the similarity
-  * parameters (see [[Artifacts]]). */
+  * (pairs → clusters → filter), each stage materialized. The
+  * similarity parameters are pinned in the path. */
 object ClusterArtifact {
 
-  def path(dir: String, threshold: Double, maxDf: Int): String = {
-    val t = math.round(threshold * 100)
-    s"${Artifacts.path(dir, "documents", "dedupcc")}_t${t}_d$maxDf"
-  }
-
-  /** Force a (re)build of the labels: min-label connected components
-    * over the materialized pair list → `(doc_id, cluster)`. The pair
-    * generation itself lives in [[PairsArtifact]] (lazily built here
-    * if absent). */
-  def materialize(spark: SparkSession, dir: String,
-                  threshold: Double, maxDf: Int): String = synchronized {
-    val p = path(dir, threshold, maxDf)
-    if (Artifacts.skipBuild(p, Seq("labels"))) return p
-    Clusters.connectedComponents(
-        PairsArtifact.pairs(spark, dir, threshold, maxDf)
+  /** Min-label connected components over the materialized pair list
+    * → `(doc_id, cluster)`. */
+  private def spec(threshold: Double, maxDf: Int) =
+    Artifact("dedupcc", "documents",
+        s"_t${math.round(threshold * 100)}_d$maxDf", Seq("labels")) { b =>
+      b.write("labels", Clusters.connectedComponents(
+        PairsArtifact.pairs(b.spark, b.dir, threshold, maxDf)
           .select(col("da"), col("db")),
-        "da", "db")
-      .write.mode("overwrite").parquet(s"$p/labels")
-    p
-  }
+        "da", "db"))
+    }
 
-  /** Read the label table `(doc_id, cluster)`, building it first if
-    * absent. Only docs in some near-dup pair carry a label. */
+  def path(dir: String, threshold: Double, maxDf: Int): String =
+    spec(threshold, maxDf).path(dir)
+
+  def materialize(spark: SparkSession, dir: String,
+                  threshold: Double, maxDf: Int): String =
+    spec(threshold, maxDf).materialize(spark, dir)
+
+  /** The label table `(doc_id, cluster)`. Only docs in some near-dup
+    * pair carry a label. */
   def labels(spark: SparkSession, dir: String,
-             threshold: Double, maxDf: Int): DataFrame = {
-    val p = path(dir, threshold, maxDf)
-    if (!Artifacts.complete(p, Seq("labels")))
-      materialize(spark, dir, threshold, maxDf)
-    Artifacts.read(spark, s"$p/labels")
-  }
+             threshold: Double, maxDf: Int): DataFrame =
+    spec(threshold, maxDf).read(spark, dir, "labels")
 }

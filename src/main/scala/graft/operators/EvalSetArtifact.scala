@@ -10,30 +10,23 @@ import graft.Tables
   * FIXED per corpus — at scale it is derived once from the benchmark
   * suite and shipped to every screening job, never re-shingled inside
   * each query. `q_eval_shingles_build` is the registered build step;
-  * `q_contamination` and `q_corpus_prep` consume the artifact.
-  * Keyed by a size/mtime fingerprint of `documents.parquet`
-  * (see [[Artifacts]]). */
+  * `q_contamination` and `q_corpus_prep` consume the artifact. */
 object EvalSetArtifact {
 
-  def path(dir: String): String = Artifacts.path(dir, "documents", "evalsh")
-
-  /** Force a (re)build: the distinct 5-gram shingle set of the
-    * held-out source. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("shingles"))) return p
-    Dedup.docShingles(
-        Tables.documents(spark, dir).filter(col("source") === "src0"), 5)
-      .select(col("shingle")).distinct()
-      .write.mode("overwrite").parquet(s"$p/shingles")
-    p
+  private val spec = Artifact("evalsh", "documents", "",
+      Seq("shingles")) { b =>
+    b.write("shingles", Dedup.docShingles(
+        Tables.documents(b.spark, b.dir).filter(col("source") === "src0"), 5)
+      .select(col("shingle")).distinct())
   }
 
-  /** Read the eval shingle set (one `shingle` column), building it
-    * first if absent. Small by nature — callers broadcast it. */
-  def shingles(spark: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("shingles"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/shingles")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  /** The distinct 5-gram shingle set of the held-out source (one
+    * `shingle` column). Small by nature — callers broadcast it. */
+  def shingles(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, "shingles")
 }

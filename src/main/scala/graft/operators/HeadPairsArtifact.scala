@@ -24,8 +24,6 @@ import graft.Tables
   * candidate table. */
 object HeadPairsArtifact {
 
-  def path(dir: String): String = Artifacts.path(dir, "documents", "headpairs")
-
   private def candPlan(spark: SparkSession, dir: String): DataFrame = {
     val keyed = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
@@ -45,22 +43,18 @@ object HeadPairsArtifact {
       .distinct()
   }
 
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("pairs"))) return p
-    candPlan(spark, dir).write.mode("overwrite").parquet(s"$p/pairs")
-    p
+  private val spec = Artifact("headpairs", "documents", "",
+      Seq("pairs")) { b =>
+    b.write("pairs", candPlan(b.spark, b.dir))
   }
 
-  private def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("pairs")))
-      materialize(spark, dir)
-    p
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
 
   /** The distinct blocked candidate pairs
     * `(id_a, id_b, lang, ha, hb)` with `id_a < id_b`. */
   def pairs(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/pairs")
+    spec.read(spark, dir, "pairs")
 }

@@ -17,30 +17,24 @@ import graft.Tables
   * that grades the sketch), and `q_sketch_hll_overlap` consumes the
   * written registers for its pure union/intersection algebra. The
   * artifact is ≤ sources × 256 rows — trivially broadcastable, the
-  * whole point of the sketch. Keyed by a size/mtime fingerprint of
-  * `documents.parquet` (see [[Artifacts]]). */
+  * whole point of the sketch. */
 object HllArtifact {
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "hllregs")}_sh5"
-
-  /** Force a (re)build: `(g, idx, mr)` per-source registers. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("regs"))) return p
-    val sh = Tables.documents(spark, dir)
+  private val spec = Artifact("hllregs", "documents", "_sh5",
+      Seq("regs")) { b =>
+    val sh = Tables.documents(b.spark, b.dir)
       .select(col("source"),
         explode(TextAnalysis.shingles(col("text"))).as("sh"))
-    Sketches.hllRegisters(sh, col("sh"), col("source"))
-      .hint("rebalance")
-      .write.mode("overwrite").parquet(s"$p/regs")
-    p
+    b.write("regs",
+      Sketches.hllRegisters(sh, col("sh"), col("source")).hint("rebalance"))
   }
 
-  /** Per-source registers `(g, idx, mr)`, building first if absent. */
-  def registers(spark: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("regs"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/regs")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  /** Per-source registers `(g, idx, mr)`. */
+  def registers(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, "regs")
 }

@@ -9,13 +9,22 @@ import graft.Tables
   * search query prices the build into each search. Here
   * `q_embed_ivf_refined` is the registered build step (it already IS
   * the index build — Lloyd refinement + final assignment) and the
-  * search queries consume the written index. Keyed by a size/mtime
-  * fingerprint of `embeddings.parquet` (see [[Artifacts]]) so a
-  * regenerated corpus always rebuilds. */
+  * search queries consume the written index. */
 object IvfArtifact {
 
+  /** Lloyd-refined centroids `(cell, cvec, cnrm)` and the inverted
+    * list `(vec_id, cell, embedding, nrm)`. */
+  private def spec(numCentroids: Int, iterations: Int) =
+    Artifact("ivf", "embeddings", s"_c${numCentroids}_i$iterations",
+        Seq("centroids", "inverted")) { b =>
+      val (cents, inverted) = Similarity.ivfIndex(
+        Tables.embeddings(b.spark, b.dir), numCentroids, iterations)
+      b.write("centroids", cents)
+      b.write("inverted", inverted)
+    }
+
   def path(dir: String, numCentroids: Int, iterations: Int): String =
-    s"${Artifacts.path(dir, "embeddings", "ivf")}_c${numCentroids}_i$iterations"
+    spec(numCentroids, iterations).path(dir)
 
   /** Corpus-sized centroid count — the standard IVF sizing rule
     * C ∝ √N (cells and per-cell list lengths grow together, so probe
@@ -42,34 +51,15 @@ object IvfArtifact {
                    iterations: Int = 2): DataFrame =
     inverted(spark, dir, autoFor(spark, dir), iterations)
 
-  /** Force a (re)build: Lloyd-refined centroids `(cell, cvec, cnrm)`
-    * and the inverted list `(vec_id, cell, embedding, nrm)`. */
   def materialize(spark: SparkSession, dir: String,
-                  numCentroids: Int, iterations: Int): String = synchronized {
-    val p = path(dir, numCentroids, iterations)
-    if (Artifacts.skipBuild(p, Seq("centroids", "inverted"))) return p
-    val (cents, inverted) = Similarity.ivfIndex(
-      Tables.embeddings(spark, dir), numCentroids, iterations)
-    cents.write.mode("overwrite").parquet(s"$p/centroids")
-    inverted.write.mode("overwrite").parquet(s"$p/inverted")
-    p
-  }
-
-  private def ensure(spark: SparkSession, dir: String,
-                     numCentroids: Int, iterations: Int): String = {
-    val p = path(dir, numCentroids, iterations)
-    if (!Artifacts.complete(p, Seq("centroids", "inverted")))
-      materialize(spark, dir, numCentroids, iterations)
-    p
-  }
+                  numCentroids: Int, iterations: Int): String =
+    spec(numCentroids, iterations).materialize(spark, dir)
 
   def centroids(spark: SparkSession, dir: String,
                 numCentroids: Int, iterations: Int): DataFrame =
-    Artifacts.read(spark, 
-      s"${ensure(spark, dir, numCentroids, iterations)}/centroids")
+    spec(numCentroids, iterations).read(spark, dir, "centroids")
 
   def inverted(spark: SparkSession, dir: String,
                numCentroids: Int, iterations: Int): DataFrame =
-    Artifacts.read(spark, 
-      s"${ensure(spark, dir, numCentroids, iterations)}/inverted")
+    spec(numCentroids, iterations).read(spark, dir, "inverted")
 }

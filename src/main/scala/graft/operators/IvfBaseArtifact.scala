@@ -28,41 +28,28 @@ object IvfBaseArtifact {
   val Iterations = 2
   val BatchN = 8
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "embeddings", "ivfbase")}_c${NumCentroids}_i${Iterations}_n$BatchN"
-
-  private def parts = Seq("centroids", "meta")
-
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, parts)) return p
+  private val spec = Artifact("ivfbase", "embeddings",
+      s"_c${NumCentroids}_i${Iterations}_n$BatchN",
+      Seq("centroids", "meta")) { b =>
     val (cents, m, nAll) = Similarity.ivfAppendBaseCentroids(
-      Tables.embeddings(spark, dir), NumCentroids, Iterations, BatchN)
-    cents.write.mode("overwrite").parquet(s"$p/centroids")
-    spark.range(1).select(lit(m).as("m"), lit(nAll).as("n_all"))
-      .write.mode("overwrite").parquet(s"$p/meta")
-    p
+      Tables.embeddings(b.spark, b.dir), NumCentroids, Iterations, BatchN)
+    b.write("centroids", cents)
+    b.write("meta",
+      b.spark.range(1).select(lit(m).as("m"), lit(nAll).as("n_all")))
   }
 
-  private def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, parts)) materialize(spark, dir)
-    p
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
 
   /** The stored centroids `(cell, cvec, cnrm)`. */
   def centroids(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/centroids")
-
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Long, Long)]()
+    spec.read(spark, dir, "centroids")
 
   /** `(m, n_all)`: batch boundary and total corpus size. */
   def meta(spark: SparkSession, dir: String): (Long, Long) = {
-    val p = ensure(spark, dir)
-    metaCache.computeIfAbsent((spark, p), _ => {
-      val r = Artifacts.read(spark, s"$p/meta").head()
-      (r.getLong(0), r.getLong(1))
-    })
+    val r = spec.first(spark, dir, "meta")
+    (r.getLong(0), r.getLong(1))
   }
 }

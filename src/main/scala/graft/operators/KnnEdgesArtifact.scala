@@ -8,34 +8,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * build step) votes with all `K` neighbors, `q_label_prop` propagates
   * over the `rnk <= 3` prefix. The rank column is what makes one
   * artifact serve every k' <= K consumer; storing the largest k any
-  * consumer needs costs only K rows per vector. Keyed by the
-  * embeddings fingerprint (see [[Artifacts]]) so a regenerated corpus
-  * always rebuilds; parameters are pinned in the path so a config
-  * change can never serve a mismatched graph. */
+  * consumer needs costs only K rows per vector. Built from the IVF
+  * inverted list ([[IvfArtifact]]); parameters are pinned in the path
+  * so a config change can never serve a mismatched graph. */
 object KnnEdgesArtifact {
 
   /** Largest neighbor count any registry consumer reads. */
   val K = 5
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "embeddings", "knnedges")}_c8_i2_k$K"
-
-  /** Force a (re)build from the (lazily ensured) IVF inverted list —
-    * the registered build step always pays this cost so the bench
-    * prices it honestly. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("edges"))) return p
-    Similarity.inCellTopK(IvfArtifact.inverted(spark, dir, 8, 2), K)
-      .write.mode("overwrite").parquet(s"$p/edges")
-    p
+  private val spec = Artifact("knnedges", "embeddings", s"_c8_i2_k$K",
+      Seq("edges")) { b =>
+    b.write("edges",
+      Similarity.inCellTopK(IvfArtifact.inverted(b.spark, b.dir, 8, 2), K))
   }
 
-  /** The edge table, building first if absent — any registry subset
-    * runs standalone in any order. */
-  def edges(spark: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("edges"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/edges")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  def edges(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, "edges")
 }

@@ -19,9 +19,7 @@ import graft.Tables
   * plan). The byte size is stored ALONGSIDE the blob precisely so
   * catalog queries stay off the binary column.
   *
-  * Keyed by a size/mtime fingerprint of `documents.parquet` (see
-  * [[Artifacts]]) so a regenerated corpus always rebuilds. The
-  * synthesis recipes are the deterministic integer functions the
+  * The synthesis recipes are the deterministic integer functions the
   * DuckDB oracles replay ([[Codecs]], [[Jpeg]],
   * [[Multimodal.wrapWithHeader]]).
   */
@@ -46,9 +44,6 @@ object MediaArtifact {
     * v5: + tiff (baseline II uncompressed RGB8, round 11).
     * v6: + mpg (MPEG-1 video elementary stream, round 12). */
   private val LayoutVersion = 6
-
-  def path(dir: String): String =
-    Artifacts.path(dir, "documents", s"media_v$LayoutVersion")
 
   /** All 16 container synths for one batch of documents `(id, text
     * bytes)` — shared by the full build and the append path. */
@@ -81,18 +76,24 @@ object MediaArtifact {
       }
     }(mediaRowEnc)
 
-  /** Force a (re)build: one pass over documents, one partitioned
-    * write. 16 container synths per doc, all in-partition. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("media"))) return p
+  /** One pass over documents, one partitioned write. 16 container
+    * synths per doc, all in-partition. */
+  private val spec = Artifact(s"media_v$LayoutVersion", "documents", "",
+      Seq("media")) { b =>
+    val docs = docBytes(b.spark, Tables.documents(b.spark, b.dir))
+    b.write("media", mediaRows(docs).toDF(), "format")
+  }
+
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  private def docBytes(spark: SparkSession,
+      docs: DataFrame): Dataset[(Long, Array[Byte])] = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id").as("id"), col("text").cast("binary"))
+    docs.select(col("doc_id").as("id"), col("text").cast("binary"))
       .as[(Long, Array[Byte])]
-    mediaRows(docs).toDF().write.mode("overwrite").partitionBy("format")
-      .parquet(s"$p/media")
-    p
   }
 
   /** INCREMENTAL build: synthesize media rows for `newDocs`
@@ -104,26 +105,19 @@ object MediaArtifact {
     * byte-for-byte (MediaIncrementSpec pins both: old files
     * unmodified, and full-rebuild value equality). Caller owns the
     * root and dedup of re-sent ids (append is at-least-once, exactly
-    * like a production media lake's ingest contract). */
+    * like a production media lake's ingest contract). Runs under the
+    * root's build lock and drops its cached relations, so a later read
+    * lists the appended files. */
   def appendDocs(spark: SparkSession, root: String,
-      newDocs: org.apache.spark.sql.DataFrame): Unit = synchronized {
-    import spark.implicits._
-    val docs = newDocs
-      .select(col("doc_id").as("id"), col("text").cast("binary"))
-      .as[(Long, Array[Byte])]
-    mediaRows(docs).toDF().write.mode("append").partitionBy("format")
-      .parquet(s"$root/media")
-  }
-
-  private def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(s"$p", Seq("media"))) materialize(spark, dir)
-    p
+      newDocs: DataFrame): Unit = Artifacts.withLock(root) {
+    mediaRows(docBytes(spark, newDocs)).toDF().write.mode("append")
+      .partitionBy("format").parquet(s"$root/media")
+    Artifacts.invalidate(root)
   }
 
   /** The full media table (format is the partition column). */
   def table(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/media")
+    spec.read(spark, dir, "media")
 
   /** One format's records as the typed decode-seam input. The format
     * filter is a PARTITION filter (directory pruning, no data read

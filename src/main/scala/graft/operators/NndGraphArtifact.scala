@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialized NN-descent kNN graph `(qid, vec_id, cos, rnk)` — the
@@ -8,9 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `q_embed_graph_search` answers queries by BEAM-walking the stored
   * edges ([[Similarity.graphBeamSearch]]), touching the corpus only to
   * score visited candidates. Built at graph degree K=10 so every
-  * consumer reads a rank prefix. Keyed by the embeddings fingerprint
-  * (see [[Artifacts]]); parameters pinned in the path so a config
-  * change can never serve a mismatched graph. */
+  * consumer reads a rank prefix. Parameters are pinned in the path so
+  * a config change can never serve a mismatched graph. */
 object NndGraphArtifact {
 
   /** Graph degree (rank-prefix consumers read k' <= K). */
@@ -18,34 +18,24 @@ object NndGraphArtifact {
   val Rounds = 3
   val ScatterDegree = 10
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "embeddings", "nndgraph")}_k${K}_r${Rounds}_s$ScatterDegree"
-
-  /** Force a (re)build — the registered build step always pays this
-    * cost so the bench prices it honestly. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("edges"))) return p
+  private val spec = Artifact("nndgraph", "embeddings",
+      s"_k${K}_r${Rounds}_s$ScatterDegree", Seq("edges")) { b =>
     // the parquet write IS the descent's finalizing action — one
     // materializing pass over the round cascade, not a count + a
     // write (see the nnDescent finalize overload)
     Similarity.nnDescent(
-      graft.Tables.embeddings(spark, dir)
-        .select(org.apache.spark.sql.functions.col("vec_id"),
-          org.apache.spark.sql.functions.col("embedding")),
-      KnnEdgesArtifact.edges(spark, dir)
-        .select(org.apache.spark.sql.functions.col("qid"),
-          org.apache.spark.sql.functions.col("vec_id")),
+      graft.Tables.embeddings(b.spark, b.dir)
+        .select(col("vec_id"), col("embedding")),
+      KnnEdgesArtifact.edges(b.spark, b.dir).select(col("qid"), col("vec_id")),
       k = K, rounds = Rounds, scatterDegree = ScatterDegree,
-      finalize = _.write.mode("overwrite").parquet(s"$p/edges"))
-    p
+      finalize = b.write("edges", _))
   }
 
-  /** The edge table, building first if absent — any registry subset
-    * runs standalone in any order. */
-  def edges(spark: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("edges"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/edges")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  def edges(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, "edges")
 }

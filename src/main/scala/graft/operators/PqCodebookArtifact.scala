@@ -26,24 +26,20 @@ import graft.Tables
   * cheap filter of the corpus, not a training pass. */
 object PqCodebookArtifact {
 
-  def path(dir: String, iterations: Int): String =
-    s"${Artifacts.path(dir, "embeddings", "pqcb")}_i$iterations"
+  private def spec(iterations: Int) =
+    Artifact("pqcb", "embeddings", s"_i$iterations", Seq("codebook")) { b =>
+      b.write("codebook", Similarity.pqCodebookRefined(
+        Tables.embeddings(b.spark, b.dir), iterations))
+    }
+
+  def path(dir: String, iterations: Int): String = spec(iterations).path(dir)
 
   def materialize(spark: SparkSession, dir: String,
-                  iterations: Int): String = synchronized {
-    val p = path(dir, iterations)
-    if (Artifacts.skipBuild(p, Seq("codebook"))) return p
-    Similarity.pqCodebookRefined(Tables.embeddings(spark, dir), iterations)
-      .write.mode("overwrite").parquet(s"$p/codebook")
-    p
-  }
+                  iterations: Int): String =
+    spec(iterations).materialize(spark, dir)
 
   /** The refined codebook `(sub, cidx, cvec)`. */
   def codebook(spark: SparkSession, dir: String,
-               iterations: Int): DataFrame = {
-    val p = path(dir, iterations)
-    if (!Artifacts.complete(p, Seq("codebook")))
-      materialize(spark, dir, iterations)
-    Artifacts.read(spark, s"$p/codebook")
-  }
+               iterations: Int): DataFrame =
+    spec(iterations).read(spark, dir, "codebook")
 }

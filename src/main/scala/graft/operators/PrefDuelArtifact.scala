@@ -24,17 +24,13 @@ import graft.Tables
   * Both are deterministic pure functions of the events table (exact
   * integer arithmetic end to end), so consumers read byte-identical
   * values to what they previously computed inline — the DuckDB oracle
-  * still replays the full derivation from `events`. Keyed by source
-  * dir + events fingerprint; consumers lazily build, so any registry
-  * subset runs standalone in any order. At 100 TB this is exactly the
-  * production posture: the duel matrix is vocabulary-sized (items²),
-  * the one corpus pass that builds it is paid once, and every audit
-  * query downstream is matrix-sized. */
+  * still replays the full derivation from `events`. At 100 TB this is
+  * exactly the production posture: the duel matrix is
+  * vocabulary-sized (items²), the one corpus pass that builds it is
+  * paid once, and every audit query downstream is matrix-sized. */
 object PrefDuelArtifact {
 
   val Iters = 2
-
-  def path(dir: String): String = Artifacts.path(dir, "events", "prefduel")
 
   /** Engine-side duel derivation shared by the preference queries:
     * each user's consecutive event pairs (by event_id) with differing
@@ -59,33 +55,29 @@ object PrefDuelArtifact {
       .agg(count(lit(1)).as("n"))
   }
 
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("wins", "fit"))) return p
-    val wins = duelWins(spark, dir)
+  private val spec = Artifact("prefduel", "events", "",
+      Seq("wins", "fit")) { b =>
+    val wins = duelWins(b.spark, b.dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      wins.write.mode("overwrite").parquet(s"$p/wins")
+      b.write("wins", wins)
       val fit = BradleyTerry.strengths(wins, iters = Iters)
-      try fit.write.mode("overwrite").parquet(s"$p/fit")
+      try b.write("fit", fit)
       finally fit.unpersist()
     } finally wins.unpersist()
-    p
   }
 
-  private def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("wins", "fit")))
-      materialize(spark, dir)
-    p
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
 
   /** The duel win matrix `(winner, loser, n)`. */
   def wins(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/wins")
+    spec.read(spark, dir, "wins")
 
   /** The 2-round Bradley-Terry fit
     * `(item, n_wins, n_games, strength_ppm)`. */
   def fit(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/fit")
+    spec.read(spark, dir, "fit")
 }

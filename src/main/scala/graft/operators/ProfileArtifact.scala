@@ -23,15 +23,11 @@ import graft.Tables
   * floor-divisions, min-over-strings tie-break), so consumers read
   * byte-identical rows to what they previously computed inline — the
   * DuckDB oracle still replays the full derivation from `events`
-  * (the shared `profileCte`). Keyed by source dir + events
-  * fingerprint; consumers lazily build, so any registry subset runs
-  * standalone in any order. At 100 TB this is the production posture:
+  * (the shared `profileCte`). At 100 TB this is the production posture:
   * the profile is users-sized, the corpus passes that build it are
   * paid once, and every release-audit query downstream is
   * group-histogram-sized. */
 object ProfileArtifact {
-
-  def path(dir: String): String = Artifacts.path(dir, "events", "profile")
 
   /** Engine-side profile derivation (moved verbatim from
     * `PrivacyQueries.profile`): per (user, type, day) counts+cents,
@@ -62,17 +58,17 @@ object ProfileArtifact {
           " cast(9 as bigint))").as("sbkt"))
   }
 
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("profile"))) return p
-    derive(spark, dir).write.mode("overwrite").parquet(s"$p/profile")
-    p
+  private val spec = Artifact("profile", "events", "",
+      Seq("profile")) { b =>
+    b.write("profile", derive(b.spark, b.dir))
   }
 
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
   /** The per-user profile `(user_id, dom_type, ebkt, dbkt, sbkt)`. */
-  def profile(spark: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("profile"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/profile")
-  }
+  def profile(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, "profile")
 }

@@ -15,38 +15,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are the registered build steps (each already pays its scoring
   * pass; the parquet write is the only addition), and
   * `q_students_agree` / `q_conformal_threshold` drop from
-  * full-scoring cost to label-table joins.
-  *
-  * Keyed like [[TeacherArtifact]]: a size/mtime fingerprint of
-  * `documents.parquet` plus the fixed task parameters, so a
-  * regenerated corpus can never serve stale scores. Consumers lazily
-  * rebuild absent artifacts, so any registry subset runs standalone.
+  * full-scoring cost to label-table joins. Keyed like
+  * [[TeacherArtifact]], plus the fixed task parameters.
   */
 object NbScoresArtifact {
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "nbscores")}_bp${TeacherArtifact.trainCutBp}_v256"
-
-  /** Force a (re)build: score every held-out doc against every class
-    * under the NB model trained on the teacher artifact's train
-    * slice, and write `(doc_id, actual, label, score)` — exact BIGINT
-    * nano log-likelihoods. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("scores"))) return p
-    Classify.nbHeldOutScoresFrom(TeacherArtifact.labeled(spark, dir),
-        TeacherArtifact.toks(spark, dir))
-      .hint("rebalance")
-      .write.mode("overwrite").parquet(s"$p/scores")
-    p
+  /** Every held-out doc scored against every class under the NB model
+    * trained on the teacher artifact's train slice:
+    * `(doc_id, actual, label, score)` — exact BIGINT nano
+    * log-likelihoods. */
+  private val spec = Artifact("nbscores", "documents",
+      s"_bp${TeacherArtifact.trainCutBp}_v256", Seq("scores")) { b =>
+    b.write("scores", Classify.nbHeldOutScoresFrom(
+        TeacherArtifact.labeled(b.spark, b.dir),
+        TeacherArtifact.toks(b.spark, b.dir))
+      .hint("rebalance"))
   }
 
-  /** Per-(held-out doc, class) NB scores, building first if absent. */
-  def scores(spark: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("scores"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/scores")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  /** Per-(held-out doc, class) NB scores. */
+  def scores(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, "scores")
 }
 
 /** Rocchio student predictions `(doc_id, actual, predicted)` on the
@@ -54,23 +47,20 @@ object NbScoresArtifact {
   * [[NbScoresArtifact]] for the tier's contract. */
 object RocchioPredsArtifact {
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "rcpreds")}_bp${TeacherArtifact.trainCutBp}_v256"
-
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("preds"))) return p
-    Classify.rocchioHeldOutFrom(TeacherArtifact.labeled(spark, dir),
-        TeacherArtifact.toks(spark, dir), maxVocab = 256)
-      .hint("rebalance")
-      .write.mode("overwrite").parquet(s"$p/preds")
-    p
+  private val spec = Artifact("rcpreds", "documents",
+      s"_bp${TeacherArtifact.trainCutBp}_v256", Seq("preds")) { b =>
+    b.write("preds", Classify.rocchioHeldOutFrom(
+        TeacherArtifact.labeled(b.spark, b.dir),
+        TeacherArtifact.toks(b.spark, b.dir), maxVocab = 256)
+      .hint("rebalance"))
   }
 
-  /** Per-held-out-doc Rocchio predictions, building first if absent. */
-  def preds(spark: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("preds"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/preds")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  /** Per-held-out-doc Rocchio predictions. */
+  def preds(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, "preds")
 }

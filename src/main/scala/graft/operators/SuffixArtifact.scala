@@ -38,10 +38,8 @@ object SuffixArtifact {
     * would assign; the DuckDB oracle replaying the plain construction
     * still matches hash-for-hash), read from the stored `plain_dense`
     * part. */
-  def last(spark: SparkSession, dir: String): DataFrame = {
-    val p = StridedSuffixArtifact.ensure(spark, dir)
-    Artifacts.read(spark, s"$p/plain_dense")
-  }
+  def last(spark: SparkSession, dir: String): DataFrame =
+    StridedSuffixArtifact.spec.read(spark, dir, "plain_dense")
 }
 
 /** Strided suffix-array artifact — the FINAL rank level over
@@ -61,58 +59,44 @@ object StridedSuffixArtifact {
   val Stride: Int = Window / 2
   val Rounds: Int = SuffixArtifact.Rounds
 
-  // BlockBase is part of the key: stored bids are base-dependent, so
-  // a base change must never serve a stale table
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "suffixstrided")}_w${Window}_s${Stride}_b${SuffixArray.BlockBase}"
-
-  private def parts: Seq[String] = Seq(s"level_$Rounds", "plain_dense")
-
   /** The overlapping-block view of the corpus this artifact ranks —
     * recomputed from `documents` on demand (one narrow map, no
     * shuffle); consumers attach block texts for the in-row LCP. */
   def blockText(spark: SparkSession, dir: String): DataFrame =
     SuffixArray.blocks(graft.Tables.documents(spark, dir), Window, Stride)
 
-  /** Force a (re)build — the registered build step always pays this
-    * cost so the bench prices it honestly. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, parts)) return p
-    val blk = SuffixArray.blocks(
-      graft.Tables.documents(spark, dir), Window, Stride)
+  // BlockBase is part of the key: stored bids are base-dependent, so
+  // a base change must never serve a stale table
+  private[operators] val spec = Artifact("suffixstrided", "documents",
+      s"_w${Window}_s${Stride}_b${SuffixArray.BlockBase}",
+      Seq(s"level_$Rounds", "plain_dense")) { b =>
     // round 13: the final level comes from ONE direct suffix-text
     // sort ([[SuffixArray.finalLevel]] — rank-identical to the
     // doubling, which remains as the differential-test reference)
     // instead of 7 doubling rounds of 2 exchanges each.
-    SuffixArray.finalLevel(blk, Window)
-      .write.mode("overwrite").parquet(s"$p/level_$Rounds")
+    b.write(s"level_$Rounds",
+      SuffixArray.finalLevel(blockText(b.spark, b.dir), Window))
     // plain view: block-0 restriction in plain coordinates, dense
     // re-rank paid once here (order/equality-preserving restriction,
     // so re-densifying yields exactly the plain construction's ranks).
     // Derived from the parquet just written — the doubling's levels
     // are un-checkpointed lazy frames and must not execute twice.
     val base = SuffixArray.BlockBase
-    val plain = Artifacts.read(spark, s"$p/level_$Rounds")
+    val plain = b.read(s"level_$Rounds")
       .filter(pmod(col("doc_id"), lit(base)) === 0)
       .select(expr(s"doc_id DIV $base").as("doc_id"), col("pos"),
         col("rank"))
-    SuffixArray.denseRerank(plain)
-      .write.mode("overwrite").parquet(s"$p/plain_dense")
-    p
+    b.write("plain_dense", SuffixArray.denseRerank(plain))
   }
 
-  private[operators] def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, parts)) materialize(spark, dir)
-    p
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
 
   /** The stored final level, block-coordinate keyed. */
-  def last(spark: SparkSession, dir: String): DataFrame = {
-    val p = ensure(spark, dir)
-    Artifacts.read(spark, s"$p/level_$Rounds")
-  }
+  def last(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, s"level_$Rounds")
 }
 
 /** Materialized STRIDED repeat-pair table — the rank-adjacency LCP
@@ -125,28 +109,23 @@ object StridedSuffixArtifact {
   * IVF → kNN-edges → NN-descent chain applied to the suffix family. */
 object StridedLrsPairsArtifact {
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "suffixpairs")}_w${StridedSuffixArtifact.Window}_s${StridedSuffixArtifact.Stride}_b${SuffixArray.BlockBase}"
-
-  /** Force a (re)build — the registered build step always pays this
-    * cost so the bench prices it honestly. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("pairs"))) return p
-    SuffixArray.longestRepeatedStrided(
-        StridedSuffixArtifact.last(spark, dir),
-        StridedSuffixArtifact.blockText(spark, dir),
-        StridedSuffixArtifact.Window, StridedSuffixArtifact.Stride)
-      .write.mode("overwrite").parquet(s"$p/pairs")
-    p
+  private val spec = Artifact("suffixpairs", "documents",
+      s"_w${StridedSuffixArtifact.Window}_s${StridedSuffixArtifact.Stride}" +
+        s"_b${SuffixArray.BlockBase}", Seq("pairs")) { b =>
+    b.write("pairs", SuffixArray.longestRepeatedStrided(
+      StridedSuffixArtifact.last(b.spark, b.dir),
+      StridedSuffixArtifact.blockText(b.spark, b.dir),
+      StridedSuffixArtifact.Window, StridedSuffixArtifact.Stride))
   }
 
-  /** The stored pair table, building first if absent. */
-  def pairs(spark: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("pairs"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/pairs")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  /** The stored pair table. */
+  def pairs(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, "pairs")
 }
 
 /** Materialized PLAIN repeat-pair table — [[SuffixArray.longestRepeated]]
@@ -157,25 +136,19 @@ object StridedLrsPairsArtifact {
   * the pair table. */
 object PlainLrsPairsArtifact {
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "suffixplainpairs")}_w${SuffixArtifact.MaxLen}"
-
-  /** Force a (re)build — the registered build step always pays this
-    * cost so the bench prices it honestly. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("pairs"))) return p
-    SuffixArray.longestRepeated(
-        graft.Tables.documents(spark, dir),
-        SuffixArtifact.last(spark, dir), SuffixArtifact.MaxLen)
-      .write.mode("overwrite").parquet(s"$p/pairs")
-    p
+  private val spec = Artifact("suffixplainpairs", "documents",
+      s"_w${SuffixArtifact.MaxLen}", Seq("pairs")) { b =>
+    b.write("pairs", SuffixArray.longestRepeated(
+      graft.Tables.documents(b.spark, b.dir),
+      SuffixArtifact.last(b.spark, b.dir), SuffixArtifact.MaxLen))
   }
 
-  /** The stored pair table, building first if absent. */
-  def pairs(spark: SparkSession, dir: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("pairs"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/pairs")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  /** The stored pair table. */
+  def pairs(spark: SparkSession, dir: String): DataFrame =
+    spec.read(spark, dir, "pairs")
 }

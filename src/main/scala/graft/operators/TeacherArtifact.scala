@@ -18,59 +18,44 @@ import graft.Tables
   * ONCE (it stands in for an LLM labeling run); students then train
   * against the frozen label table. So the pass is a materialized
   * artifact: `q_nb_distill` is the registered build step (it pays the
-  * corpus scan + explode + token aggregate + parquet writes honestly),
-  * and the other two students consume the written tables, lazily
-  * rebuilding if absent so any registry subset runs standalone.
-  *
-  * Keyed by a size/mtime fingerprint of `documents.parquet` plus the
-  * teacher/split parameters (see [[Artifacts]]), so a regenerated
-  * corpus can never serve stale labels.
+  * corpus scan + explode + token aggregate + parquet writes), and the
+  * other two students consume the written tables.
   */
 object TeacherArtifact {
 
   /** The registry's fixed teacher task: profile labeler, 80/20 split. */
   val trainCutBp = 8000
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "teacher")}_profile_bp$trainCutBp"
-
-  /** Force a (re)build. Two parquet outputs share ONE persisted
-    * labeled-corpus scan:
+  /** Two parquet outputs share ONE persisted labeled-corpus scan:
     *  - labeled: (doc_id, actual, is_train)            — one row per doc
     *  - toks:    (doc_id, actual, is_train, token, tcnt) — per-doc counts
     */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("labeled", "toks"))) return p
-    val labeled = Tables.documents(spark, dir)
+  private val spec = Artifact("teacher", "documents",
+      s"_profile_bp$trainCutBp", Seq("labeled", "toks")) { b =>
+    val labeled = Tables.documents(b.spark, b.dir)
       .select(col("doc_id"),
         TextAnalysis.predictedProfile(col("text")).as("actual"),
         (Sampling.hashBasisPoints(col("doc_id")) < trainCutBp).as("is_train"),
         col("text"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      labeled.select(col("doc_id"), col("actual"), col("is_train"))
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$p/labeled")
-      Classify.tokenCounts(labeled, Seq("doc_id", "actual", "is_train"))
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$p/toks")
+      b.write("labeled", labeled.select(col("doc_id"), col("actual"),
+        col("is_train")).hint("rebalance"))
+      b.write("toks", Classify.tokenCounts(labeled,
+        Seq("doc_id", "actual", "is_train")).hint("rebalance"))
     } finally labeled.unpersist()
-    p
   }
 
-  private def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("labeled", "toks"))) materialize(spark, dir)
-    p
-  }
+  def path(dir: String): String = spec.path(dir)
 
-  /** Per-doc teacher labels `(doc_id, actual, is_train)`, building the
-    * artifact first if absent. */
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  /** Per-doc teacher labels `(doc_id, actual, is_train)`. */
   def labeled(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/labeled")
+    spec.read(spark, dir, "labeled")
 
   /** Per-doc token counts `(doc_id, actual, is_train, token, tcnt)`. */
   def toks(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/toks")
+    spec.read(spark, dir, "toks")
 }

@@ -13,29 +13,22 @@ import graft.Tables
   * queries from it; re-running tokenize → tf → df → stop-cut inside
   * every retrieval query prices the index build into each search.
   * `q_text_cosine_knn` is the registered build step (it pays the
-  * corpus scan + two aggregates + parquet writes honestly); consumers
-  * read the written postings, lazily rebuilding if absent so any
-  * registry subset runs standalone.
+  * corpus scan + two aggregates + parquet writes); consumers read the
+  * written postings.
   *
   * Weights are the engine's exact-rational idf (`tf · n_docs div df`)
   * under the standard `df·10 ≤ n_docs` stop-term cut, so everything
-  * downstream of the index is integer arithmetic. Keyed by a
-  * size/mtime fingerprint of `documents.parquet` (see [[Artifacts]]).
+  * downstream of the index is integer arithmetic.
   */
 object TermIndexArtifact {
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "termidx")}_cap10"
-
-  /** Force a (re)build. Two parquet outputs share one persisted
-    * posting build:
+  /** Two parquet outputs share one persisted posting build:
     *  - kept:  (doc_id, term, w)  — df-capped integer tf-idf postings
     *  - norms: (doc_id, nrm)      — per-doc Σw² (BIGINT)
     */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("kept", "norms"))) return p
-    val docs = Tables.documents(spark, dir)
+  private val spec = Artifact("termidx", "documents", "_cap10",
+      Seq("kept", "norms")) { b =>
+    val docs = Tables.documents(b.spark, b.dir)
     val tf = docs
       .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("term"))
       .groupBy(col("doc_id"), col("term"))
@@ -47,24 +40,22 @@ object TermIndexArtifact {
       .select(col("doc_id"), col("term"), expr("(tf * nd) div df").as("w"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      kept.hint("rebalance").write.mode("overwrite").parquet(s"$p/kept")
-      kept.groupBy(col("doc_id")).agg(sum(col("w") * col("w")).as("nrm"))
-        .hint("rebalance").write.mode("overwrite").parquet(s"$p/norms")
+      b.write("kept", kept.hint("rebalance"))
+      b.write("norms", kept.groupBy(col("doc_id"))
+        .agg(sum(col("w") * col("w")).as("nrm")).hint("rebalance"))
     } finally kept.unpersist()
-    p
   }
 
-  private def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("kept", "norms"))) materialize(spark, dir)
-    p
-  }
+  def path(dir: String): String = spec.path(dir)
 
-  /** Df-capped postings `(doc_id, term, w)`, building first if absent. */
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
+
+  /** Df-capped postings `(doc_id, term, w)`. */
   def kept(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/kept")
+    spec.read(spark, dir, "kept")
 
   /** Per-doc squared norms `(doc_id, nrm)`. */
   def norms(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/norms")
+    spec.read(spark, dir, "norms")
 }

@@ -15,21 +15,16 @@ import graft.Tables
   * (`q_topic_purity`). Re-running the two assignment passes inside
   * every consumer would repeat the corpus-wide tf joins; instead
   * `q_text_topics` is the registered build step (it pays the full
-  * pipeline plus the parquet writes honestly every run) and the
-  * consumers join against the written label table, lazily rebuilding
-  * if absent so any registry subset runs standalone.
+  * pipeline plus the parquet writes) and the consumers join against
+  * the written label table.
   *
   * The tf input is NOT re-tokenized here either: the per-doc token
   * counts come from the materialized tokenized corpus
   * ([[TeacherArtifact]] `toks` — same `TextAnalysis.tokens`
   * whitespace tokenization, the label columns simply pruned at the
-  * parquet scan). Keyed by a size/mtime fingerprint of
-  * `documents.parquet` (see [[Artifacts]]), so a regenerated corpus
-  * can never serve stale topics.
+  * parquet scan).
   */
 object TopicArtifact {
-
-  def path(dir: String): String = Artifacts.path(dir, "documents", "topics")
 
   /** Per-doc full-vocabulary tf vectors `(doc_id, term, w)` — read
     * from the materialized tokenized corpus, never re-exploded. */
@@ -37,7 +32,7 @@ object TopicArtifact {
     TeacherArtifact.toks(spark, dir)
       .select(col("doc_id"), col("token").as("term"), col("tcnt").as("w"))
 
-  /** Force a (re)build: one Lloyd round of spherical k-means (seeds =
+  /** One Lloyd round of spherical k-means (seeds =
     * per-`lang`-stratum tf-norm argmax docs; centroids bounded to 256
     * components by the native bounded-top-k aggregate; both
     * assignment passes broadcast joins + integer aggregates — see the
@@ -47,11 +42,10 @@ object TopicArtifact {
     *  - cent:   (topic, pos, term, c)   — 256-bounded centroid,
     *                                      pos = rank by (c DESC, term)
     */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("assign", "cent"))) return p
-    val docs = Tables.documents(spark, dir)
-    val kept = tf(spark, dir)
+  private val spec = Artifact("topics", "documents", "",
+      Seq("assign", "cent")) { b =>
+    val docs = Tables.documents(b.spark, b.dir)
+    val kept = tf(b.spark, b.dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val norms = kept.groupBy(col("doc_id"))
@@ -111,27 +105,25 @@ object TopicArtifact {
             Seq("doc_id"), "left")
           .crossJoin(fallback)
           .select(col("doc_id"), coalesce(col("hit"), col("fbt")).as("topic"))
-        a2.hint("rebalance").write.mode("overwrite").parquet(s"$p/assign")
-        cent.write.mode("overwrite").parquet(s"$p/cent")
+        b.write("assign", a2.hint("rebalance"))
+        b.write("cent", cent)
       } finally centTop.unpersist()
     } finally kept.unpersist()
-    p
   }
 
-  private def ensure(spark: SparkSession, dir: String): String = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("assign", "cent"))) materialize(spark, dir)
-    p
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
 
   /** Final topic assignment `(doc_id, topic)` — every doc with at
     * least one token carries a label; the topic id is its seed doc's
     * id (label-by-representative, like connected components). */
   def assign(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/assign")
+    spec.read(spark, dir, "assign")
 
   /** Bounded centroids `(topic, pos, term, c)`, pos = 0-based rank by
     * (c DESC, term ASC) within the topic. */
   def centroids(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.read(spark, s"${ensure(spark, dir)}/cent")
+    spec.read(spark, dir, "cent")
 }

@@ -59,9 +59,6 @@ object UnigramVocabArtifact {
     * piece score < B. */
   val B: Long = 1L << 42
 
-  def path(dir: String): String =
-    s"${Artifacts.path(dir, "documents", "unigramvocab")}_l${MaxLen}p$PieceMax"
-
   /** In-row forward DP: `dp[j]` (1-based `element_at`, index j+1) =
     * best `(cost, last-piece length)` for the word's first j chars,
     * minimized over the scored pieces ending at j — `array_min`'s
@@ -116,12 +113,9 @@ object UnigramVocabArtifact {
     (seg, usage)
   }
 
-  /** Force a (re)build — the registered build step always pays this
-    * cost so the bench prices it honestly. */
-  def materialize(spark: SparkSession, dir: String): String = synchronized {
-    val p = path(dir)
-    if (Artifacts.skipBuild(p, Seq("vocab", "reprs"))) return p
-    val words = graft.Tables.documents(spark, dir)
+  private val spec = Artifact("unigramvocab", "documents",
+      s"_l${MaxLen}p$PieceMax", Seq("vocab", "reprs")) { b =>
+    val words = graft.Tables.documents(b.spark, b.dir)
       .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0 && length(col("w")) <= MaxLen)
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -147,29 +141,24 @@ object UnigramVocabArtifact {
       .select(col("piece"), coalesce(col("c"), lit(0L)).as("c"))
       .unionByName(u1.filter(length(col("piece")) > 1))
     val (segs2, usage2) = viterbi(ex, vocab2)
-    usage2
-      .select(col("piece"), length(col("piece")).cast("long").as("piece_len"),
-        col("c"))
-      .write.mode("overwrite").parquet(s"$p/vocab")
-    segs2
-      .select(col("w"), col("f"), col("n_pieces"), col("repr"))
-      .write.mode("overwrite").parquet(s"$p/reprs")
-    p
+    b.write("vocab", usage2.select(col("piece"),
+      length(col("piece")).cast("long").as("piece_len"), col("c")))
+    b.write("reprs",
+      segs2.select(col("w"), col("f"), col("n_pieces"), col("repr")))
   }
 
-  private def part(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val p = path(dir)
-    if (!Artifacts.complete(p, Seq("vocab", "reprs"))) materialize(spark, dir)
-    Artifacts.read(spark, s"$p/$name")
-  }
+  def path(dir: String): String = spec.path(dir)
+
+  def materialize(spark: SparkSession, dir: String): String =
+    spec.materialize(spark, dir)
 
   /** Final learned vocabulary `(piece, piece_len, c)` — pieces
     * actually used by the pass-2 segmentation, scored by usage. */
   def vocab(spark: SparkSession, dir: String): DataFrame =
-    part(spark, dir, "vocab")
+    spec.read(spark, dir, "vocab")
 
   /** Every in-domain word's decomposition `(w, f, n_pieces, repr)`
     * under the learned vocabulary. */
   def reprs(spark: SparkSession, dir: String): DataFrame =
-    part(spark, dir, "reprs")
+    spec.read(spark, dir, "reprs")
 }

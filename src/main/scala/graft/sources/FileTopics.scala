@@ -147,18 +147,34 @@ object FileTopics {
         col("offset").as("seq"))
   }
 
-  /** Kafka-sink stand-in with Kafka's semantics (AT-LEAST-ONCE on
-    * retry, key-routed partitions): call from `foreachBatch`. Rows
-    * are routed to their partition on executors (one exchange on the
-    * partition id — no driver collect) and each partition file has
-    * exactly one writer per batch. Routing is the native codegen'd
-    * [[graft.functions.FnvPartition]] Column expression — the sink
-    * projection stays inside whole-stage codegen (no per-row Scala
-    * UDF), and null keys route like the empty key instead of NPE-ing. */
+  /** Kafka-sink stand-in with key-routed partitions: call from
+    * `foreachBatch`. Rows are routed to their partition on executors
+    * (one exchange on the partition id — no driver collect) and each
+    * partition file has exactly one writer per batch. Routing is the
+    * native codegen'd [[graft.functions.FnvPartition]] Column
+    * expression — the sink projection stays inside whole-stage codegen
+    * (no per-row Scala UDF), and null keys route like the empty key
+    * instead of NPE-ing.
+    *
+    * Idempotent per (query id, batch id): a restarted query replays
+    * its last uncommitted batch under the same id, so each partition
+    * keeps a ledger `<root>/<topic>/_sink/<query id>.p<k>` holding the
+    * last batch id appended to it (written after the append), and a
+    * batch at or below it is skipped. The ids are the local properties
+    * Spark's micro-batch thread sets (`sql.streaming.queryId`,
+    * `streaming.sql.batchId`) and `foreachBatch` runs on; a call
+    * outside a streaming query has neither and always appends. A crash
+    * between an append and its ledger write still replays that one
+    * partition's rows. */
   def sinkBatch(root: String, topic: String, numPartitions: Int)(
       batch: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.graftshim.ColumnShim
+    val sc = batch.sparkSession.sparkContext
+    val ids = for {
+      q <- Option(sc.getLocalProperty("sql.streaming.queryId"))
+      b <- Option(sc.getLocalProperty("streaming.sql.batchId"))
+    } yield (q, b.toLong)
     val keyCol = col("key").cast("string")
     val routed = batch
       .select(keyCol.as("key"), col("value").cast("string").as("value"),
@@ -167,19 +183,39 @@ object FileTopics {
       .repartition(numPartitions, col("p"))
     routed.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
       it.toSeq.groupBy(_.getInt(2)).foreach { case (p, rows) =>
-        val f = logFile(root, topic, p)
-        f.getParentFile.mkdirs()
-        val out = new java.io.FileOutputStream(f, true)
-        try {
-          val sb = new StringBuilder
-          rows.foreach { r =>
-            sb.append(enc(r.getString(0))).append('\t')
-              .append(enc(r.getString(1))).append('\n')
-          }
-          out.write(sb.toString.getBytes("UTF-8"))
-        } finally out.close()
+        val ledger = ids.map { case (q, b) =>
+          (java.nio.file.Paths.get(root, topic, "_sink", s"$q.p$p"), b)
+        }
+        if (ledger.forall { case (l, b) => lastSunk(l) < b }) {
+          val f = logFile(root, topic, p)
+          f.getParentFile.mkdirs()
+          val out = new java.io.FileOutputStream(f, true)
+          try {
+            val sb = new StringBuilder
+            rows.foreach { r =>
+              sb.append(enc(r.getString(0))).append('\t')
+                .append(enc(r.getString(1))).append('\n')
+            }
+            out.write(sb.toString.getBytes("UTF-8"))
+          } finally out.close()
+          ledger.foreach { case (l, b) => recordSunk(l, b) }
+        }
       }
     }
+  }
+
+  private def lastSunk(ledger: java.nio.file.Path): Long =
+    if (!java.nio.file.Files.exists(ledger)) -1L
+    else new String(java.nio.file.Files.readAllBytes(ledger), "UTF-8")
+      .trim.toLong
+
+  /** Replace the ledger atomically, so a crash never leaves it torn. */
+  private def recordSunk(ledger: java.nio.file.Path, batchId: Long): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    Files.createDirectories(ledger.getParent)
+    val tmp = Files.createTempFile(ledger.getParent, ".ledger", ".tmp")
+    Files.write(tmp, batchId.toString.getBytes("UTF-8"))
+    Files.move(tmp, ledger, StandardCopyOption.ATOMIC_MOVE)
   }
 }
 

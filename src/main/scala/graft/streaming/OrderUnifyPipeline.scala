@@ -64,8 +64,10 @@ object OrderUnifyPipeline {
     *
     * In both modes all four envelope fields are required
     * (`OrderEvent.java:21-24`) — well-formed JSON missing id/type/
-    * timestamp drops the record. `order_details` passes through as raw
-    * JSON (whitespace-normalized by the extractor).
+    * timestamp drops the record. A `timestamp` that is not an instant
+    * (e.g. `"yesterday"`) is dropped and counted like malformed JSON,
+    * or fails the query under `failFast`. `order_details` passes
+    * through as raw JSON (whitespace-normalized by the extractor).
     */
   def parseAndCanonicalize(records: DataFrame,
                            failFast: Boolean = false): Dataset[OrderEvent] = {
@@ -101,7 +103,11 @@ object OrderUnifyPipeline {
     extracted
       // P1 — canonicalize with topic fallback (OrderProjectionTopology.java:84-97)
       .withColumn("eventType", coalesce(aliasExpr, fallbackExpr))
-      .withColumn("ts", col("tsStr").cast("timestamp"))
+      // a non-ISO timestamp fails the query under failFast (as the
+      // reference's deserializer does) and is dropped otherwise
+      .withColumn("ts",
+        if (failFast) col("tsStr").cast("timestamp")
+        else col("tsStr").try_cast("timestamp"))
       // S7 — observability: the reference crashes on malformed JSON
       // (serde/JsonDeserializer.java:27-31); we null-and-filter and
       // surface the drop count as an observed metric instead

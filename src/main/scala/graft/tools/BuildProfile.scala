@@ -23,13 +23,7 @@ object BuildProfile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      f.delete(); ()
-    }
-    rmTree(new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_artifacts"))
+    graft.operators.Artifacts.wipe()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {

@@ -122,11 +122,16 @@ class UnigramVocabSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     val r1 = UnigramVocabArtifact.reprs(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(3))).sortBy(_._1)
-    UnigramVocabArtifact.materialize(spark, dir) // force rebuild
+    // force a rebuild through the runtime: drop the root and its
+    // cached relations, so the next read builds from scratch
+    val root = UnigramVocabArtifact.path(dir)
+    Artifacts.wipe(root)
+    assert(!new java.io.File(root).exists())
     val v2 = UnigramVocabArtifact.vocab(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     val r2 = UnigramVocabArtifact.reprs(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(3))).sortBy(_._1)
+    assert(Artifacts.complete(root), "the read must have rebuilt the root")
     assert(v1.toSeq == v2.toSeq)
     assert(r1.toSeq == r2.toSeq)
   }

@@ -33,13 +33,18 @@ class FileTopicsE2ESpec extends AnyFunSuite {
 
     val seen = FileTopicsE2ESpec.seen
     seen.clear()
+    val ids = new ConcurrentLinkedQueue[(String, String, Long)]()
     def run(): org.apache.spark.sql.streaming.StreamingQuery =
       spark.readStream.format(classOf[FileTopicsProvider].getName)
         .option("root", root).option("topics", topics.mkString(","))
         .load()
         .writeStream
         .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+          // the ids sinkBatch's ledger reads: visible inside foreachBatch
+          val sc = df.sparkSession.sparkContext
+          ids.add((sc.getLocalProperty("sql.streaming.queryId"),
+            sc.getLocalProperty("streaming.sql.batchId"), id))
           df.collect().foreach { r =>
             seen.add((r.getString(2), r.getInt(3), r.getLong(4),
               r.getString(0), r.getString(1)))
@@ -50,6 +55,10 @@ class FileTopicsE2ESpec extends AnyFunSuite {
 
     val q1 = run()
     try q1.processAllAvailable() finally q1.stop()
+    assert(!ids.isEmpty)
+    ids.forEach { case (qid, bid, id) =>
+      assert(qid == q1.id.toString && bid == id.toString)
+    }
     val afterFirst = seen.size()
     assert(afterFirst == 20, s"first run must deliver all 20, got $afterFirst")
 
@@ -71,6 +80,33 @@ class FileTopicsE2ESpec extends AnyFunSuite {
     all.foreach { case (t, p, _, k, _) =>
       assert(p == FileTopics.partitionFor(k, 2), s"mis-routed key $k in $t")
     }
+  }
+
+  test("sinkBatch appends a replayed (query id, batch id) once") {
+    import spark.implicits._
+    val root = tmp("ftopics-replay")
+    val sc = spark.sparkContext
+    def sinkAs(batchId: Long, rows: Seq[(String, String)]): Unit = {
+      sc.setLocalProperty("sql.streaming.queryId", "q-replay")
+      sc.setLocalProperty("streaming.sql.batchId", batchId.toString)
+      try FileTopics.sinkBatch(root, "out", 2)(rows.toDF("key", "value"))
+      finally {
+        sc.setLocalProperty("sql.streaming.queryId", null)
+        sc.setLocalProperty("streaming.sql.batchId", null)
+      }
+    }
+    def sunk(): Vector[(String, String)] = (0 until 2).flatMap { p =>
+      FileTopics.readRange(root, "out", p, 0L, Long.MaxValue)
+        .map { case (k, v, _) => (k, v) }
+    }.toVector
+    val b7 = Seq(("a", "1"), ("b", "2"), ("c", "3"))
+    sinkAs(7, b7)
+    sinkAs(7, b7) // the replay after a restart
+    assert(sunk().sorted == b7.sorted, "a replayed batch must not append again")
+    sinkAs(8, Seq(("a", "4")))
+    assert(sunk().sorted == (b7 :+ (("a", "4"))).sorted)
+    // the ledger files are not partition logs: offsets count records only
+    assert(FileTopics.latestOffsets(root, Seq("out")).values.sum == 4L)
   }
 
   test("TWS default path through the contract: RocksDB session, file source -> unify -> sink") {
