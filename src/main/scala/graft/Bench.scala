@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every registry query on
   * SPARK_GRAFT_SF_DIR and prints exactly one JSON line.
   *
@@ -84,7 +82,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sfDirV = sfDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     outPathV = java.nio.file.Paths.get(
       args.headOption.getOrElse(
         sys.props.getOrElse("user.dir", ".") + "/bench_result.json"))
@@ -105,15 +102,7 @@ object Bench {
       }
     }, "bench-partial-json"))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-bench")
 
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run (local hotspot
     // iteration); the driver never sets it, so its runs time everything.

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * branches of their own plan consume; they do NOT unpersist (the
   * returned DataFrame is lazy — the persisted blocks are only
   * populated when the caller executes it). Every harness that runs
-  * registry queries (Bench, Verify, QueryProbe) MUST call
+  * registry queries (Bench, Verify, tools.Profile) MUST call
   * `spark.sqlContext.clearCache()` after consuming each query's
   * result, or a long session accumulates every query's leftover
   * blocks. */

@@ -9,12 +9,12 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Wall-clock matters here: the driver runs this inside a time budget,
-  * and a 324-query registry at local[4] blew it in round 10 (empty
-  * CORRECTNESS_r10.json). Two fixes: (a) default to local[32] like
-  * Bench — the host has 32 cores; (b) run queries CONCURRENTLY in
+  * and a 324-query registry on 4 local cores blew it in round 10 (empty
+  * CORRECTNESS_r10.json). Two fixes: (a) one local thread per core
+  * (`Sessions.cpus`), as Bench; (b) run queries CONCURRENTLY in
   * small batches (SPARK_GRAFT_VERIFY_PAR, default 4 threads) — a
-  * single sf0.01 query leaves most of 32 cores idle during planning
-  * and small stages. Cache hygiene moves to batch boundaries:
+  * single sf0.01 query leaves most cores idle during planning and
+  * small stages. Cache hygiene moves to batch boundaries:
   * `clearCache()` mid-batch would drop a sibling query's persisted
   * intermediates mid-execution, so the cache is cleared only after a
   * whole batch completes (artifact builds take a lock per artifact
@@ -27,15 +27,9 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val t0 = System.nanoTime()

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * except the per-doc score aggregate. Out-of-vocab tokens take the
   * class's smoothed unknown mass via coalesce, so the scorer is
   * total. Measured cost is ~85% fixed stage latency (2.6 s at sf0.01
-  * vs 3.1 s at 10× the data, local[32]): the ~10-job model-build DAG
+  * vs 3.1 s at 10× the data, 32 cores): the ~10-job model-build DAG
   * dominates, and its stage count is independent of corpus size.
   */
 object Classify {

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   */
 object Clusters {
 
-  /** Diagnostic only (read by tools/CcProbe and specs): rounds run and
+  /** Diagnostic only (read by tools.Profile and specs): rounds run and
     * convergence status of the LAST connectedComponents call on this
     * driver. Not part of the operator contract. */
   @volatile var lastRounds: Int = 0

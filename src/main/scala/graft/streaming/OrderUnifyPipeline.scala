@@ -34,7 +34,7 @@ object OrderUnifyPipeline {
     Seq("order-created", "order-placed", "order-cancelled")
   val sinkTopic: String = "order-projection"
 
-  /** The envelope schema, for strict-mode parsing. All leaves are
+  /** The envelope schema. All leaves are
     * strings: `order_details` is free-form JSON captured as raw text
     * (the reference treats it as an opaque passthrough,
     * `OrderEvent.java:17,24`). */
@@ -55,12 +55,13 @@ object OrderUnifyPipeline {
     * Malformed-JSON policy is configurable:
     *  - `failFast = false` (default): null-and-filter, surfacing the
     *    drop count as an observed metric (SURVEY.md §7 risk 5 — the
-    *    operationally safer divergence).
+    *    operationally safer divergence). `from_json` runs in
+    *    PERMISSIVE mode.
     *  - `failFast = true`: reproduce the reference exactly — a record
     *    whose value is not parseable JSON fails the stream
     *    (`serde/JsonDeserializer.java:27-31` crashes the stream
-    *    thread). Parsing runs through `from_json` in FAILFAST mode, so
-    *    the micro-batch task throws and the query terminates.
+    *    thread). `from_json` runs in FAILFAST mode, so the micro-batch
+    *    task throws and the query terminates.
     *
     * In both modes all four envelope fields are required
     * (`OrderEvent.java:21-24`) — well-formed JSON missing id/type/
@@ -83,24 +84,16 @@ object OrderUnifyPipeline {
       acc.when(col("topic") === t, lit(c))
     }
 
-    val extracted =
-      if (failFast)
-        records
-          .withColumn("env", from_json(col("value"), envelopeSchema,
-            Map("mode" -> "FAILFAST")))
-          .withColumn("orderId", col("env").getField("order-id"))
-          .withColumn("rawType", col("env").getField("type"))
-          .withColumn("tsStr", col("env").getField("timestamp"))
-          .withColumn("orderDetails", col("env").getField("order_details"))
-          .drop("env")
-      else
-        records
-          .withColumn("orderId", get_json_object(col("value"), "$['order-id']"))
-          .withColumn("rawType", get_json_object(col("value"), "$['type']"))
-          .withColumn("tsStr", get_json_object(col("value"), "$['timestamp']"))
-          .withColumn("orderDetails", get_json_object(col("value"), "$['order_details']"))
-
-    extracted
+    records
+      // one parse per record in both modes; a duplicated top-level key
+      // is last-wins, as in the reference's Jackson `ObjectMapper`
+      .withColumn("env", from_json(col("value"), envelopeSchema,
+        Map("mode" -> (if (failFast) "FAILFAST" else "PERMISSIVE"))))
+      .withColumn("orderId", col("env").getField("order-id"))
+      .withColumn("rawType", col("env").getField("type"))
+      .withColumn("tsStr", col("env").getField("timestamp"))
+      .withColumn("orderDetails", col("env").getField("order_details"))
+      .drop("env")
       // P1 — canonicalize with topic fallback (OrderProjectionTopology.java:84-97)
       .withColumn("eventType", coalesce(aliasExpr, fallbackExpr))
       // a non-ISO timestamp fails the query under failFast (as the

@@ -1,18 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Mimics the driver's t1 smoke: call `SparkEntry.entry` on sf0.001 and
   * assert rows > 0. Run: `sbt "runMain graft.tools.EntrySmoke"`. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-smoke")
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -33,12 +33,9 @@ object TestSpark {
   }
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // a fixed width, not Sessions.cpus: every suite runs the same
+    // plans on any host
+    val s = Sessions.builder("graft-test", 4)
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       // Spark 4.1's checksum checkpoint-file manager can deadlock on
       // state-store delta commit in rapid micro-batch tests (tasks

@@ -46,4 +46,30 @@ class ObserveMetricsSpec extends AnyFunSuite {
       assert(e.getMessage.contains("CAST_INVALID_INPUT"), e.getMessage)
     } finally q.stop()
   }
+
+  test("one JSON parse per record; edge records read as the reference's deserializer") {
+    val ts = "2024-08-16T15:51:19Z"
+    def rec(key: String, value: String) = SourceRecord(key, value, "order-created", 0)
+    val df = Seq(
+      // a duplicated top-level key is last-wins, as in Jackson
+      rec("a", s"""{"order-id":"o1","order-id":"o9","type":"created","timestamp":"$ts","order_details":{}}"""),
+      // nested, whitespace-padded details pass through normalized
+      rec("b", s"""{"order-id":"o3","type":"created","timestamp":"$ts","order_details": { "a" : [1, 2], "b": {"c": null} } }"""),
+      // a number or boolean in a string field reads as its JSON text
+      rec("c", s"""{"order-id":42,"type":"created","timestamp":"$ts","order_details":{}}"""),
+      rec("d", s"""{"order-id":true,"type":"created","timestamp":"$ts","order_details":{}}"""),
+      // not an object: dropped
+      rec("e", s"""[{"order-id":"o4","type":"created","timestamp":"$ts","order_details":{}}]"""),
+      rec("f", "\"o5\"")).toDS().toDF()
+      .localCheckpoint() // a scan the optimizer cannot fold the parse into
+    val parsed = OrderUnifyPipeline.parseAndCanonicalize(df)
+    val byId = parsed.collect().map(e => e.orderId -> e.orderDetails).toMap
+    assert(byId == Map("o9" -> "{}", "o3" -> """{"a":[1,2],"b":{"c":null}}""",
+      "42" -> "{}", "true" -> "{}"))
+    val parses = parsed.queryExecution.executedPlan.collect { case p =>
+      p.expressions.flatMap(_.collect { case e
+        if Set("JsonToStructs", "GetJsonObject").contains(e.getClass.getSimpleName) => e })
+    }.flatten
+    assert(parses.size == 1, parsed.queryExecution.executedPlan.toString)
+  }
 }

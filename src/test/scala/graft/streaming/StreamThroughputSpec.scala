@@ -6,14 +6,29 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Volume soak of the unify pipeline: 20k complete lifecycles (60k
   * events, distinct keys) must all land exactly once, and end-to-end
-  * throughput must clear a deliberately conservative floor (the
-  * BASELINE.md headline figure comes from `graft.tools.StreamSoak` at
-  * 100k lifecycles; this spec guards reproducibility and
-  * exactly-onceness at volume, not the headline). */
+  * throughput must clear a deliberately conservative floor. This spec
+  * guards exactly-onceness at volume; the streaming throughput and
+  * latency figures come from the order-unify benchmark in `perfbench/`
+  * (baseline in `perfbench/README.md`). */
 class StreamThroughputSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+
+  /** Complete lifecycles `lo until hi`: created, placed and cancelled
+    * events for distinct keys `ord-<i>`, in publish order. */
+  private def lifecycleRecords(lo: Int, hi: Int): Seq[SourceRecord] = {
+    val ts = "2024-08-16T15:51:19.799Z"
+    def json(id: String, typ: String): String =
+      s"""{"order-id":"$id","type":"$typ","timestamp":"$ts","order_details":{"d":1}}"""
+    (lo until hi).flatMap { i =>
+      val id = s"ord-$i"
+      Seq(
+        SourceRecord(id, json(id, "created"), "order-created", 3L * i),
+        SourceRecord(id, json(id, "placed"), "order-placed", 3L * i + 1),
+        SourceRecord(id, json(id, "cancelled"), "order-cancelled", 3L * i + 2))
+    }
+  }
 
   /** Run `lifecycles` complete lifecycles through the AUTO-dispatched
     * pipeline on `session`, return events/s (asserts exactly-once). */
@@ -30,7 +45,7 @@ class StreamThroughputSpec extends AnyFunSuite {
     try {
       val t0 = System.nanoTime()
       (0 until lifecycles by 10000).foreach { lo =>
-        input.addData(graft.tools.StreamSoak.lifecycleRecords(
+        input.addData(lifecycleRecords(
           lo, math.min(lo + 10000, lifecycles)))
       }
       val deadline = System.currentTimeMillis() + 600000L
@@ -109,7 +124,7 @@ class StreamThroughputSpec extends AnyFunSuite {
     try {
       val t0 = System.nanoTime()
       (0 until lifecycles by 5000).foreach { lo =>
-        input.addData(graft.tools.StreamSoak.lifecycleRecords(
+        input.addData(lifecycleRecords(
           lo, math.min(lo + 5000, lifecycles)))
       }
       val deadline = System.currentTimeMillis() + 300000L

@@ -4,8 +4,12 @@
 oracle SQL in DuckDB over the same testdata tables and compare
 row-count / columns / values.  Usage:
     python3 tools/check_parity.py [sfDir] [--skip-verify] [names...]
+
+sbt runs in the checkout that holds this script. Verify's JVM gets a
+fresh, empty java.io.tmpdir under the output directory, so every
+artifact is built from the parquet inputs, as Bench does.
 """
-import json, math, subprocess, sys
+import json, math, shutil, subprocess, sys
 from pathlib import Path
 
 import duckdb
@@ -15,14 +19,20 @@ import pyarrow.parquet as pq
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith('-') \
     else "/root/testdata/sf0.01"
 OUT = "/tmp/graft_verify"
+ROOT = Path(__file__).resolve().parent.parent
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
 def run_verify(only=()):
     names = " ".join(only)
-    cmd = ["sbt", "--batch", f'runMain graft.Verify {SF_DIR} {OUT} {names}'.strip()]
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True)
+    tmp = Path(OUT) / "_tmpdir"
+    shutil.rmtree(tmp, ignore_errors=True)
+    tmp.mkdir(parents=True)
+    cmd = ["sbt", "--batch",
+           f'set javaOptions += "-Djava.io.tmpdir={tmp}"',
+           f'runMain graft.Verify {SF_DIR} {OUT} {names}'.strip()]
+    r = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-30:])
     if r.returncode != 0:
         print(tail)
