@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 
 /** MPEG-1 VIDEO (ISO/IEC 11172-2) — intra-frame decode, from scratch:
@@ -519,7 +521,7 @@ object Mpeg1 {
       }
       if (nFrames == 0) bad
       else Mpeg1Meta(id, w, h, nFrames, nI, nP, lumSum, lumWsum, ok = true)
-    } catch { case _: Throwable => bad }
+    } catch { case NonFatal(_) => bad }
   }
 
   /** Partition-batched decode seam over stored media rows. */

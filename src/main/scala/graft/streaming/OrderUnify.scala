@@ -25,6 +25,10 @@ import scala.collection.mutable.ListBuffer
   *    state is corrupt) first flushes the old buffer
   *    (emit-if-complete/drop), then starts a FRESH buffer seeded with
   *    the new event (`OrderProjectionTransformer.java:49-58`).
+  *  - G6: the deadline flush fires in the first micro-batch at or past
+  *    [[OrderUnify.timerAt]] — [[OrderUnify.TimerSlackMillis]] before
+  *    the stored deadline, so batch-timestamp jitter cannot push it a
+  *    trigger late; the projections do not change (derivation there).
   *  - G8/G9: flush emits complete projections and deletes state;
   *    incomplete buffers are dropped silently
   *    (`OrderProjectionTransformer.java:106-124`).
@@ -37,6 +41,46 @@ object OrderUnify {
   /** Default buffer window (`BUFFER_DURATION = Duration.ofSeconds(5)`,
     * `OrderProjectionTopology.java:29`). */
   val DefaultBufferMillis: Long = 5000L
+
+  /** How long before its deadline a buffer's timer fires: a buffer is
+    * due, and flushes, once `deadline - TimerSlackMillis <= now`.
+    *
+    * Why a slack: `now` is the micro-batch timestamp, which Spark takes
+    * a few ms after the trigger tick (after the source's
+    * `latestOffset`), and a deadline is the timestamp of the batch that
+    * opened the buffer + `bufferMillis`. With a trigger interval that
+    * divides `bufferMillis`, the batch one buffer later lands within
+    * that jitter of the deadline, so an exact `deadline <= now` rule
+    * flushes in it or one trigger later by chance. The slack makes it
+    * that batch: it must exceed the timestamp jitter (1-5 ms past the
+    * tick with the indexed `FileTopics` source; up to ~75 ms with the
+    * old full-log rescan) and stay below the smallest trigger interval
+    * in use (100 ms in the suites; 1 s in the reference's
+    * punctuation), so 50 ms.
+    *
+    * Why the output does not change: Spark runs a batch's input rows
+    * before its expired timers (TWS `processNewData ++ processTimers`,
+    * and FMGWS likewise). A batch whose timestamp falls in
+    * `[deadline - slack, deadline)` first merges its own arrivals into
+    * the buffer (G7 still compares against the stored deadline), then
+    * flushes it; under the exact rule the next batch, more than one
+    * trigger interval later, would have flushed the same buffer
+    * (timer or G7) before taking any later arrival. So the projections
+    * are identical and only a flush that sat on the knife edge moves
+    * one trigger earlier. The stored deadline is unchanged, and
+    * `bufferMillis` must exceed the slack, or a buffer would be due in
+    * the batch that opened it. */
+  val TimerSlackMillis: Long = 50L
+
+  /** The time a buffer with this deadline falls due: where its timer is
+    * registered, deleted and checked. */
+  def timerAt(deadlineEpochMillis: Long): Long =
+    deadlineEpochMillis - TimerSlackMillis
+
+  /** Fails unless `bufferMillis` exceeds [[TimerSlackMillis]]. */
+  def requireBuffer(bufferMillis: Long): Unit =
+    require(bufferMillis > TimerSlackMillis,
+      s"bufferMillis must exceed the ${TimerSlackMillis} ms timer slack, got $bufferMillis")
 
   /** G3+G4+G5: complete-only, priority-ordered projection payload;
     * None = incomplete (dropped, G8). */
@@ -89,8 +133,13 @@ object OrderUnify {
 
   /** Spark adapter: the `flatMapGroupsWithState` function. Timeout
     * re-arming preserves the FIXED deadline: every invocation re-sets
-    * the remaining duration from the stored deadline instead of a fresh
-    * full window. */
+    * the remaining duration to the stored deadline's [[timerAt]]
+    * instead of a fresh full window. A buffer already due after this
+    * batch's arrivals flushes at once, as the TWS timer would after
+    * the batch's input rows (FMGWS skips the timeout of a key it just
+    * updated). Spark times a processing-time timeout out only once the
+    * batch timestamp is strictly past it, so otherwise FMGWS flushes
+    * 1 ms later than TWS, well inside the slack. */
   def stateFunc(bufferMillis: Long)(
       orderId: String,
       rows: Iterator[OrderEvent],
@@ -104,12 +153,14 @@ object OrderUnify {
       val arrivals = rows.toSeq.sortBy(_.seq)
       val (out, next) = onEvents(orderId, arrivals, state.getOption, now, bufferMillis)
       next match {
-        case Some(p) =>
+        case Some(p) if timerAt(p.deadlineEpochMillis) > now =>
           state.update(p)
-          state.setTimeoutDuration(math.max(1L, p.deadlineEpochMillis - now))
-        case None => if (state.exists) state.remove()
+          state.setTimeoutDuration(timerAt(p.deadlineEpochMillis) - now)
+          out.iterator
+        case _ =>
+          if (state.exists) state.remove()
+          (out ++ onTimeout(orderId, next)).iterator
       }
-      out.iterator
     }
 }
 

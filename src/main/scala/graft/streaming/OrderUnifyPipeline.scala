@@ -188,12 +188,14 @@ object OrderUnifyPipeline {
   /** The `flatMapGroupsWithState` implementation — the Spark-3-
     * compatible fallback (works on any state-store provider). */
   def unifyFmgws(events: Dataset[OrderEvent],
-            bufferMillis: Long = OrderUnify.DefaultBufferMillis): Dataset[ProjectionResult] =
+            bufferMillis: Long = OrderUnify.DefaultBufferMillis): Dataset[ProjectionResult] = {
+    OrderUnify.requireBuffer(bufferMillis)
     events
       .groupByKey(_.orderId)
       .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
         OrderUnify.stateFunc(bufferMillis) _)
+  }
 
   /** Kafka source for the three lifecycle topics — the live deployment
     * shape (S1). `seq` = partition offset (arrival order per key, since

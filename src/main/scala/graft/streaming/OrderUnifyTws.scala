@@ -9,9 +9,15 @@ import org.apache.spark.sql.streaming._
   * but the mapping to the reference is even more direct:
   *
   *  - the fixed per-order deadline is an EXPLICIT registered timer
-  *    (`registerTimer(deadline)`), set once at buffer creation and only
+  *    (`registerTimer(OrderUnify.timerAt(deadline))`, the documented
+  *    slack before the deadline), set once at buffer creation and only
   *    re-registered when a stale buffer is replaced (G7) — no per-batch
-  *    re-arming;
+  *    re-arming. Spark fires it after the batch's input rows, in the
+  *    first batch whose timestamp is at or past it, so a buffer flushes
+  *    in the trigger its deadline falls due in and the projections are
+  *    the exact-deadline rule's ([[OrderUnify.TimerSlackMillis]]).
+  *    Timers that an older checkpoint registered at the deadline itself
+  *    still fire and flush;
   *  - the timer firing is the punctuator path
   *    (`OrderProjectionTransformer.java:90-104`), per key instead of a
   *    full-store scan.
@@ -22,6 +28,8 @@ import org.apache.spark.sql.streaming._
   */
 class OrderUnifyProcessor(bufferMillis: Long)
     extends StatefulProcessor[String, OrderEvent, ProjectionResult] {
+
+  OrderUnify.requireBuffer(bufferMillis)
 
   @transient private var pending: ValueState[PendingOrder] = _
 
@@ -34,7 +42,7 @@ class OrderUnifyProcessor(bufferMillis: Long)
       rows: Iterator[OrderEvent],
       timerValues: TimerValues): Iterator[ProjectionResult] = {
     val now = timerValues.getCurrentProcessingTimeInMs()
-    val prior = if (pending.exists()) Some(pending.get()) else None
+    val prior = Option(pending.get())
     val arrivals = rows.toSeq.sortBy(_.seq)
     val (out, next) = OrderUnify.onEvents(orderId, arrivals, prior, now, bufferMillis)
     next match {
@@ -42,8 +50,8 @@ class OrderUnifyProcessor(bufferMillis: Long)
         pending.update(p)
         val priorDeadline = prior.map(_.deadlineEpochMillis)
         if (!priorDeadline.contains(p.deadlineEpochMillis)) {
-          priorDeadline.foreach(getHandle.deleteTimer)
-          getHandle.registerTimer(p.deadlineEpochMillis)
+          priorDeadline.foreach(d => getHandle.deleteTimer(OrderUnify.timerAt(d)))
+          getHandle.registerTimer(OrderUnify.timerAt(p.deadlineEpochMillis))
         }
       case None => pending.clear()
     }
@@ -51,20 +59,21 @@ class OrderUnifyProcessor(bufferMillis: Long)
   }
 
   /** Migration seeding ([[OrderUnifyInitProcessor]]): write a carried
-    * buffer and re-register its deadline timer. */
-  private[streaming] def seed(p: PendingOrder, timerAt: Long): Unit = {
+    * buffer and re-register its deadline timer, no earlier than
+    * `notBefore`. */
+  private[streaming] def seed(p: PendingOrder, notBefore: Long): Unit = {
     pending.update(p)
-    getHandle.registerTimer(timerAt)
+    getHandle.registerTimer(math.max(OrderUnify.timerAt(p.deadlineEpochMillis), notBefore))
   }
 
   override def handleExpiredTimer(
       orderId: String,
       timerValues: TimerValues,
       expiredTimerInfo: ExpiredTimerInfo): Iterator[ProjectionResult] = {
-    val prior = if (pending.exists()) Some(pending.get()) else None
     // a timer may outlive its buffer (G7 replaced it); flush only a
-    // buffer whose own deadline has actually been reached
-    val due = prior.filter(_.deadlineEpochMillis <= expiredTimerInfo.getExpiryTimeInMs())
+    // buffer that its own timer has made due
+    val due = Option(pending.get()).filter(p =>
+      OrderUnify.timerAt(p.deadlineEpochMillis) <= expiredTimerInfo.getExpiryTimeInMs())
     val out = OrderUnify.onTimeout(orderId, due)
     if (due.nonEmpty) pending.clear()
     out.iterator
@@ -75,9 +84,10 @@ class OrderUnifyProcessor(bufferMillis: Long)
   * side of the FMGWS→TWS checkpoint migration
   * ([[StateMigration]]): each migrated key's buffer is written into
   * the TWS value state and its FIXED deadline re-registered as an
-  * explicit timer (clamped one tick ahead if already past, so a
-  * stale-at-cutover buffer flushes on the first batch exactly as the
-  * old implementation's pending timeout would have). */
+  * explicit timer at [[OrderUnify.timerAt]] (clamped one tick ahead if
+  * already past, so a stale-at-cutover buffer flushes on the first
+  * batch exactly as the old implementation's pending timeout would
+  * have). */
 class OrderUnifyInitProcessor(bufferMillis: Long)
     extends StatefulProcessorWithInitialState[
       String, OrderEvent, ProjectionResult, PendingOrder] {
@@ -91,9 +101,7 @@ class OrderUnifyInitProcessor(bufferMillis: Long)
 
   override def handleInitialState(orderId: String, initial: PendingOrder,
       timerValues: TimerValues): Unit = {
-    inner.seed(initial,
-      math.max(initial.deadlineEpochMillis,
-        timerValues.getCurrentProcessingTimeInMs() + 1L))
+    inner.seed(initial, timerValues.getCurrentProcessingTimeInMs() + 1L)
   }
 
   override def handleInputRows(orderId: String, rows: Iterator[OrderEvent],

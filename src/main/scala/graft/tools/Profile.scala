@@ -5,9 +5,10 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 import graft.operators.{Artifacts, Clusters}
 
@@ -101,11 +102,16 @@ object Profile {
 
   /** Prints the jobs that carry the [[Tag]] local property, and their
     * completed stages; threads started by the tagged thread inherit the
-    * tag. */
+    * tag. A job is named by its `spark.job.description`, else by the
+    * description of the SQL execution it runs in (the action's call
+    * site: AQE submits a query's stage jobs from its own threads, whose
+    * call sites all read `CompletableFuture`), else by its first
+    * stage. */
   private final class JobLines(out: String => Unit) extends SparkListener {
     private val Drain = "graft.profile.drain"
     private val jobs = new ConcurrentHashMap[Int, (Long, String, Seq[Int])]()
     private val stages = ConcurrentHashMap.newKeySet[Int]()
+    private val executions = new ConcurrentHashMap[Long, String]()
     @volatile private var drained = new CountDownLatch(0)
 
     /** Returns once every event posted before the call has reached this
@@ -124,6 +130,8 @@ object Profile {
           val desc = if (tag == Drain) Drain else {
             js.stageIds.foreach(stages.add)
             val d = Option(js.properties.getProperty("spark.job.description"))
+              .orElse(Option(js.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
+                .flatMap(id => Option(executions.get(id.toLong))))
               .getOrElse(js.stageInfos.headOption.map(_.name).getOrElse("?"))
             s"$tag  ${d.take(110)}"
           }
@@ -138,6 +146,12 @@ object Profile {
           out(f"[job] ${je.jobId}%4d ${je.time - t0}%7d ms  $desc")
         }
       }
+
+    override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+      case e: SparkListenerSQLExecutionStart => executions.put(e.executionId, e.description)
+      case e: SparkListenerSQLExecutionEnd => executions.remove(e.executionId)
+      case _ =>
+    }
 
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val si = sc.stageInfo

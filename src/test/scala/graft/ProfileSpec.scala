@@ -26,6 +26,10 @@ class ProfileSpec extends AnyFunSuite {
     val out = profile("--reps", "2", query)
     assert(out.count(_.startsWith(s"[total] $query rep ")) == 2, out.mkString("\n"))
     assert(out.exists(_.startsWith("[job]")) && out.exists(_.startsWith("[stage]")))
+    // AQE's stage jobs are named by their SQL execution, not by the
+    // call site of the thread AQE submits them from
+    assert(!out.exists(l => l.startsWith("[job]") && l.contains("withThreadLocalCaptured")),
+      out.mkString("\n"))
     val cc = out.filter(_.startsWith(s"[cc] $query rounds="))
     assert(cc.size == 2 && cc.forall(_.endsWith("converged=true")), out.mkString("\n"))
     assert(!out.exists(_.startsWith("[failed]")))
