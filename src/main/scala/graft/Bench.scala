@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Driver-run benchmark: times every registry query on
   * SPARK_GRAFT_SF_DIR and prints exactly one JSON line.
   *
@@ -118,7 +120,11 @@ object Bench {
       if (!terminating) {
         val q0 = System.nanoTime()
         try q.run(spark, sfDir).count()
-        catch { case _: Throwable => () }
+        catch {
+          case NonFatal(e) => System.err.println(
+            s"[bench] prebuild ${q.name} failed: ${e.getClass.getSimpleName}: " +
+              Option(e.getMessage).getOrElse("").replace('\n', ' ').take(200))
+        }
         val dt = (System.nanoTime() - q0) / 1e9
         if (dt > 2.0 || (i + 1) % 50 == 0) System.err.println(
           f"[bench] prebuild ${q.name} ${dt}%.1fs (${i + 1}/${ordered.size})")

@@ -20,7 +20,9 @@ object Sessions {
   }
 
   /** The shared base settings: `local[cpus]`, one shuffle partition per
-    * core, AQE on, UTC session time zone, UI off. */
+    * core, AQE on, UTC session time zone, UI off, and the RocksDB
+    * state-store provider the unify operator's `transformWithState`
+    * needs. */
   def builder(app: String, cpus: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -29,6 +31,8 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** The base settings on `local[Sessions.cpus]`, at log level ERROR. */
   def local(app: String): SparkSession = {

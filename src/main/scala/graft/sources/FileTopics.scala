@@ -212,22 +212,16 @@ object FileTopics {
 
   /** The reader: a streaming DataFrame with the Kafka source's
     * projection (`key, value, topic, seq`) — drop-in for
-    * [[graft.streaming.OrderUnifyPipeline.kafkaSource]]'s output.
-    * `startingOffsets` (the canonical [[FileTopicsOffset]] JSON, e.g.
-    * a value carried out of a stopped query's checkpoint by
-    * [[graft.streaming.StateMigration]]) positions a FRESH checkpoint
-    * at those offsets — the Kafka source's `startingOffsets` contract;
-    * ignored on resume because Spark then feeds the checkpointed
-    * offset back through `deserializeOffset`. */
-  def source(spark: SparkSession, root: String, topics: Seq[String],
-             startingOffsets: Option[String] = None): DataFrame = {
+    * [[graft.streaming.OrderUnifyPipeline.kafkaSource]]'s output. A
+    * fresh checkpoint starts at offset 0 of every log; a resumed one
+    * at its checkpointed offsets. */
+  def source(spark: SparkSession, root: String, topics: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val rd = spark.readStream
+    spark.readStream
       .format(classOf[FileTopicsProvider].getName)
       .option("root", root)
       .option("topics", topics.mkString(","))
-    startingOffsets.foreach(j => rd.option("startingOffsets", j))
-    rd.load()
+      .load()
       .select(col("key"), col("value"), col("topic"),
         col("offset").as("seq"))
   }
@@ -338,12 +332,10 @@ class FileTopicsProvider extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
     new FileTopicsTable(properties.get("root"),
-      properties.get("topics").split(",").toSeq,
-      Option(properties.get("startingOffsets")))
+      properties.get("topics").split(",").toSeq)
 }
 
-private[sources] class FileTopicsTable(root: String, topics: Seq[String],
-    startingOffsets: Option[String])
+private[sources] class FileTopicsTable(root: String, topics: Seq[String])
     extends Table with SupportsRead {
   override def name(): String = s"file-topics($root)"
   override def schema(): StructType = FileTopics.Schema
@@ -354,7 +346,7 @@ private[sources] class FileTopicsTable(root: String, topics: Seq[String],
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = FileTopics.Schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new FileTopicsMicroBatchStream(root, topics, startingOffsets)
+          new FileTopicsMicroBatchStream(root, topics)
       }
     }
 }
@@ -417,7 +409,7 @@ private[sources] final class LogIndex(file: java.io.File) {
 }
 
 private[sources] class FileTopicsMicroBatchStream(root: String,
-    topics: Seq[String], startingOffsets: Option[String] = None)
+    topics: Seq[String])
     extends MicroBatchStream {
 
   private val index = scala.collection.mutable.Map.empty[(String, Int), LogIndex]
@@ -430,9 +422,7 @@ private[sources] class FileTopicsMicroBatchStream(root: String,
     FileTopicsOffset(FileTopics.logs(root, topics)
       .map { case (tp, _) => tp -> indexOf(tp).latest() }.toMap)
 
-  override def initialOffset(): Offset =
-    startingOffsets.map(FileTopicsOffset.parse)
-      .getOrElse(FileTopicsOffset(Map.empty))
+  override def initialOffset(): Offset = FileTopicsOffset(Map.empty)
 
   override def deserializeOffset(json: String): Offset =
     FileTopicsOffset.parse(json)

@@ -8,7 +8,9 @@ import scala.collection.mutable.ListBuffer
   * reference's `OrderProjectionTransformer` + `OrderProjection`
   * (SURVEY.md §2.4, G1-G9). The logic is pure Scala driven by an
   * explicit `now` so every path is unit-testable; the
-  * `flatMapGroupsWithState` adapter lives in [[OrderUnifyPipeline]].
+  * `transformWithState` adapter is [[OrderUnifyProcessor]], and
+  * [[OrderUnify.stateFunc]] is the `flatMapGroupsWithState` function
+  * of the pinned comparison path ([[OrderUnifyPipeline.unify]]).
   *
   * Semantics preserved exactly:
   *  - G1: first event for a key creates the buffer with

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, TimeMode, Trigger}
 import org.apache.spark.sql.Row
 
 /** End-to-end streaming pipeline — Spark re-expression of the
@@ -11,17 +11,17 @@ import org.apache.spark.sql.Row
   * {{{
   * kafka(3 topics) -> parse JSON -> canonicalize type w/ topic fallback
   *   -> filter null/invalid -> groupByKey(orderId)   // ≙ repartition topic
-  *   -> flatMapGroupsWithState(unify)                // ≙ transformer+punctuator
+  *   -> unify (transformWithState)                   // ≙ transformer+punctuator
   *   -> (key=orderId, value=payload JSON) -> kafka sink
   * }}}
   *
   * Scale design: the only shuffle is the `groupByKey` exchange on
   * orderId (high cardinality — partitions evenly at any cluster width);
-  * state per key is bounded (≤3 events + deadline), and Spark's state
-  * store fires per-key timeouts per micro-batch instead of the
-  * reference's O(all pending keys) full-store scan every second
-  * (`OrderProjectionTransformer.java:35,90-104`) — same semantics,
-  * strictly better asymptotics.
+  * state per key is bounded (≤3 events + deadline), and Spark fires
+  * each key's registered timer in the micro-batch it falls due in
+  * instead of the reference's O(all pending keys) full-store scan every
+  * second (`OrderProjectionTransformer.java:35,90-104`) — same
+  * semantics, strictly better asymptotics.
   */
 object OrderUnifyPipeline {
 
@@ -135,67 +135,39 @@ object OrderUnifyPipeline {
   def detailsAsVariant(events: Dataset[OrderEvent]): DataFrame =
     events.withColumn("details", try_parse_json(col("orderDetails")))
 
-  /** True iff the session runs the RocksDB state-store provider —
-    * the documented production deployment (BASELINE.md: ≈3.3× the
-    * HDFS-provider throughput at 100k keys) and an OSS prerequisite
-    * for `transformWithState`. */
-  def rocksDbEnabled(spark: SparkSession): Boolean =
-    spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDBStateStoreProvider"))
-
   /** G1-G9 — the stateful unify step: shuffle by orderId (≙ the
     * reference's repartition topic, `OrderProjectionTopology.java:57-59`)
-    * then buffer/merge/flush with processing-time timeouts.
+    * then buffer/merge/flush each order at its fixed deadline.
     *
-    * DEFAULT implementation: [[OrderUnifyTws]] (`transformWithState`,
-    * explicit per-key timers — timeout cost tracks EXPIRED keys)
-    * whenever the session runs the RocksDB provider; sessions on the
-    * default HDFS provider fall back to [[unifyFmgws]], whose
-    * processing-time timeout scan touches the whole store every
-    * micro-batch — fine at demo scale, the bottleneck at 100k+ live
-    * keys (BASELINE.md table), and the same pathology as the
-    * reference's 1 s full-store punctuation scan
-    * (`OrderProjectionTransformer.java:91`). Both share the pure
-    * [[OrderUnify]] logic, so semantics are identical
-    * (OrderUnifyTwsSpec pins the equivalence).
+    * `impl = "auto"` (the default) runs [[OrderUnifyProcessor]] under
+    * `transformWithState`: one explicit timer per order, so timeout
+    * cost tracks EXPIRED keys, not the reference's 1 s full-store
+    * punctuation scan (`OrderProjectionTransformer.java:91`). It needs
+    * the RocksDB state-store provider, which [[graft.Sessions]] sets;
+    * on any other provider the started query fails.
     *
-    * CHECKPOINT COMPATIBILITY: the two implementations write
-    * DIFFERENT state formats, so the dispatch is part of a query's
-    * checkpoint identity. Restarting an existing checkpoint after
-    * flipping `spark.sql.streaming.stateStore.providerClass` would
-    * silently swap the stateful operator on the same checkpoint and
-    * fail (or corrupt) state restore. Operators resuming a checkpoint
-    * across a provider change must pin the path the checkpoint was
-    * created with via `impl` ("tws" | "fmgws"); "auto" (the default)
-    * is safe for new checkpoints and for restarts under an unchanged
-    * provider. UnifyImplPinSpec pins the override dispatch. */
+    * `impl = "fmgws"` runs the same [[OrderUnify]] logic under
+    * `flatMapGroupsWithState` with processing-time timeouts, whose
+    * scan touches the whole store every micro-batch. It is kept as a
+    * pinned comparison path; its checkpoints resume only under
+    * `"fmgws"`. Any other `impl` throws. */
   def unify(events: Dataset[OrderEvent],
             bufferMillis: Long = OrderUnify.DefaultBufferMillis,
             impl: String = "auto"): Dataset[ProjectionResult] =
     impl match {
-      case "tws"   => OrderUnifyTws.unify(events, bufferMillis)
-      case "fmgws" => unifyFmgws(events, bufferMillis)
       case "auto" =>
-        if (rocksDbEnabled(events.sparkSession))
-          OrderUnifyTws.unify(events, bufferMillis)
-        else unifyFmgws(events, bufferMillis)
+        events.groupByKey(_.orderId).transformWithState(
+          new OrderUnifyProcessor(bufferMillis),
+          TimeMode.ProcessingTime(), OutputMode.Append())
+      case "fmgws" =>
+        OrderUnify.requireBuffer(bufferMillis)
+        events.groupByKey(_.orderId).flatMapGroupsWithState(
+          OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
+          OrderUnify.stateFunc(bufferMillis) _)
       case other =>
         throw new IllegalArgumentException(
-          s"unify impl must be auto|tws|fmgws, got '$other'")
+          s"unify impl must be auto|fmgws, got '$other'")
     }
-
-  /** The `flatMapGroupsWithState` implementation — the Spark-3-
-    * compatible fallback (works on any state-store provider). */
-  def unifyFmgws(events: Dataset[OrderEvent],
-            bufferMillis: Long = OrderUnify.DefaultBufferMillis): Dataset[ProjectionResult] = {
-    OrderUnify.requireBuffer(bufferMillis)
-    events
-      .groupByKey(_.orderId)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
-        OrderUnify.stateFunc(bufferMillis) _)
-  }
 
   /** Kafka source for the three lifecycle topics — the live deployment
     * shape (S1). `seq` = partition offset (arrival order per key, since

@@ -132,53 +132,6 @@ object StreamingSketches {
       }
   }
 
-  /** `transformWithState` (Spark 4) variant of the HLL state — the
-    * RocksDB-backed production path, mirroring the unify core's dual
-    * implementation: the register array lives in a `ValueState`, the
-    * fold logic is the same associative max, and the emitted estimate
-    * is identical to [[distinctOverStream]] (spec-pinned). */
-  class HllProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, (String, String), (String, Long)] {
-
-    @transient private var regs
-      : org.apache.spark.sql.streaming.ValueState[Array[Int]] = _
-
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      regs = getHandle.getValueState[Array[Int]](
-        "hll_regs",
-        org.apache.spark.sql.Encoders.javaSerialization[Array[Int]],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        g: String,
-        rows: Iterator[(String, String)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(String, Long)] = {
-      val r = if (regs.exists()) regs.get() else new Array[Int](256)
-      rows.foreach { case (_, key) =>
-        val (i, rank) = registerOf(key)
-        if (rank > r(i)) r(i) = rank
-      }
-      regs.update(r)
-      Iterator.single((g, estimateMilli(r)))
-    }
-  }
-
-  /** [[distinctOverStream]] on the `transformWithState` engine —
-    * requires the RocksDB state-store provider. */
-  def distinctOverStreamTws(events: Dataset[(String, String)])
-      : Dataset[(String, Long)] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .transformWithState(
-        new HllProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-  }
-
   /** The md5-rank sort key of the batch bottom-k sample
     * ([[graft.operators.Sketches.bottomKSample]] orders by
     * `(md5(id), id)`): lowercase hex digest of the UTF-8 id. */

@@ -69,25 +69,23 @@ class Round9Spec extends AnyFunSuite {
 
   test("unify: impl override dispatches regardless of provider conf; bad impl throws") {
     import graft.streaming._
-    val rocks = graft.TestSpark.spark.newSession()
-    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import rocks.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = rocks.sqlContext
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[SourceRecord]
     val events = OrderUnifyPipeline.parseAndCanonicalize(input.toDF())
     def planOf(impl: String): String =
       OrderUnifyPipeline.unify(events, impl = impl)
         .queryExecution.analyzed.toString()
-    // explicit pins win over the RocksDB auto-dispatch
+    // "auto" builds transformWithState; "fmgws" pins the comparison path
+    assert(planOf("auto").contains("TransformWithState"))
+    assert(!planOf("auto").contains("FlatMapGroupsWithState"))
     assert(planOf("fmgws").contains("FlatMapGroupsWithState"))
     assert(!planOf("fmgws").contains("TransformWithState"))
-    assert(planOf("tws").contains("TransformWithState"))
-    // auto on a RocksDB session picks TWS (the default path)
-    assert(planOf("auto").contains("TransformWithState"))
-    intercept[IllegalArgumentException] {
-      OrderUnifyPipeline.unify(events, impl = "nope")
+    Seq("tws", "nope").foreach { impl =>
+      intercept[IllegalArgumentException] {
+        OrderUnifyPipeline.unify(events, impl = impl)
+      }
     }
   }
 

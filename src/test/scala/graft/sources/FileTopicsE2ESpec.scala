@@ -110,19 +110,16 @@ class FileTopicsE2ESpec extends AnyFunSuite {
   }
 
   test("TWS default path through the contract: RocksDB session, file source -> unify -> sink") {
-    // the production-default dispatch (transformWithState/RocksDB)
-    // driven by the same file-backed Kafka contract — S1..S5 on the
-    // path a real deployment runs
-    val rocks = graft.TestSpark.spark.newSession()
-    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // the default unify (transformWithState on the session's RocksDB
+    // provider) driven by the same file-backed Kafka contract — S1..S5
+    // on the path a real deployment runs
     val root = tmp("ftopics-tws")
     val ckpt = s"${graft.TestSpark.checkpointDir}/ftopics-tws"
     Seq("created", "placed", "cancelled").foreach { t =>
       FileTopics.append(root, s"order-$t", 2,
         (1 to 3).map(i => (s"tws-$i", evJson(s"tws-$i", t))))
     }
-    val src = FileTopics.source(rocks, root,
+    val src = FileTopics.source(spark, root,
       graft.streaming.OrderUnifyPipeline.sourceTopics)
     val q = graft.streaming.OrderUnifyPipeline
       .projections(src, bufferMillis = 800)

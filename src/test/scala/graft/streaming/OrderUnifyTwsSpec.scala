@@ -4,17 +4,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end checks of the `transformWithState` unify variant —
-  * explicit-timer semantics must match the flatMapGroupsWithState
-  * implementation. Runs in its own session: OSS transformWithState
-  * requires the RocksDB state-store provider. */
+/** End-to-end checks of the default (`transformWithState`) unify
+  * operator's explicit-timer semantics. */
 class OrderUnifyTwsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = graft.TestSpark.spark.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s
-  }
+  private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -27,7 +20,7 @@ class OrderUnifyTwsSpec extends AnyFunSuite {
   private def run(batches: Seq[Seq[SourceRecord]], bufferMillis: Long,
                   sleepBetween: Long, expect: Int, name: String): Seq[(String, String)] = {
     val input = MemoryStream[SourceRecord]
-    val out = OrderUnifyTws.unify(
+    val out = OrderUnifyPipeline.unify(
       OrderUnifyPipeline.parseAndCanonicalize(input.toDF()), bufferMillis)
     val q = out.writeStream.format("memory").queryName(name).outputMode("append")
       .trigger(Trigger.ProcessingTime("200 milliseconds")).start()

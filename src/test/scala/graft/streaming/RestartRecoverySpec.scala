@@ -83,7 +83,7 @@ class RestartRecoverySpec extends AnyFunSuite {
     val appliedBatches = TrieMap.empty[Long, Boolean]
     val input = MemoryStream[SourceRecord]
 
-    // with FMGWS processing-time timeouts pending, processAllAvailable
+    // with processing-time timers pending, processAllAvailable
     // can block indefinitely (see OrderUnifyStreamSpec's harness note)
     // — poll observable state against a deadline instead
     def until(deadlineMs: Long)(done: => Boolean): Unit = {

@@ -60,37 +60,6 @@ class StreamingSketchSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformWithState HLL (RocksDB) equals the batch estimate") {
-    val rocks = graft.TestSpark.spark.newSession()
-    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import rocks.implicits._
-    val data = (0 until 600).map(i => ("a", s"u-${i % 271}")) ++
-      (0 until 200).map(i => ("b", s"u-${i % 83}"))
-    val input = MemoryStream[(String, String)](
-      implicitly[org.apache.spark.sql.Encoder[(String, String)]],
-      rocks.sqlContext)
-    val q = StreamingSketches.distinctOverStreamTws(input.toDS())
-      .toDF("g", "est_milli")
-      .writeStream.format("memory").queryName("hll_tws_out")
-      .outputMode("update").start()
-    try {
-      input.addData(data.take(401))
-      q.processAllAvailable()
-      input.addData(data.drop(401) ++ data.take(99)) // replay rows
-      q.processAllAvailable()
-      val streamed = rocks.table("hll_tws_out")
-        .groupBy(col("g")).agg(max(col("est_milli")).as("m"))
-        .as[(String, Long)].collect().toMap
-      val batch = graft.operators.Sketches.hllEstimate(
-        graft.operators.Sketches.hllRegisters(
-          data.toDF("g", "k"), col("k"), col("g")))
-        .select(col("g"), floor(col("est_raw") * 1000).cast("long"))
-        .as[(String, Long)].collect().toMap
-      assert(streamed == batch)
-    } finally q.stop()
-  }
-
   test("bloomPositions replays the batch Bloom build word for word") {
     val keys = (0 until 250).map(i => s"tok-$i")
     val batch = graft.operators.Bloom.build(keys.toDF("k"), col("k"))
