@@ -34,11 +34,6 @@ object GraftFunctions {
         new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
         (exprs: Seq[Expression]) => JaroWinkler(exprs(0), exprs(1))),
       (
-        FunctionIdentifier("fnv_partition"),
-        new ExpressionInfo(classOf[FnvPartition].getName, "fnv_partition"),
-        (exprs: Seq[Expression]) => FnvPartition(
-          exprs(0), litInt(exprs(1), "fnv_partition(key, n): n"))),
-      (
         FunctionIdentifier("rolling_token_hashes"),
         new ExpressionInfo(classOf[RollingTokenHashes].getName, "rolling_token_hashes"),
         (exprs: Seq[Expression]) => RollingTokenHashes(

@@ -2,11 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for word n-gram shingling — the hot
@@ -195,63 +194,6 @@ object SimHash64 {
       i += 1
     }
     v
-  }
-}
-
-/** Native key→partition routing (FNV-1a over the key's UTF-8 bytes,
-  * floorMod to `numPartitions`) — the sink-side Kafka routing
-  * invariant (same key ⇒ same partition ⇒ per-key total order),
-  * whole-stage-codegen'd so a pipeline's sink stage never drops out
-  * of codegen for a per-row Scala UDF. NULL keys (which Kafka's
-  * record contract permits) do NOT null-propagate: they route like
-  * the empty key — deterministic partition, never an NPE — so the
-  * expression's output is non-nullable by construction. */
-case class FnvPartition(child: Expression, numPartitions: Int)
-    extends UnaryExpression {
-
-  require(numPartitions >= 1, "numPartitions must be >= 1")
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
-  override def prettyName: String = "fnv_partition"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    FnvPartition.compute(
-      if (v == null) null else v.asInstanceOf[UTF8String], numPartitions)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = c.code +
-        code"""
-          int ${ev.value} = graft.functions.FnvPartition.compute(
-            ${c.isNull} ? null : ${c.value}, $numPartitions);
-        """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object FnvPartition {
-  /** Static hot loop shared by eval, generated code, and the
-    * driver-side [[graft.sources.FileTopics.partitionFor]] (ONE
-    * routing implementation — producer and sink can never diverge).
-    * A null key hashes like the empty key: the FNV-1a basis. */
-  def compute(key: UTF8String, numPartitions: Int): Int = {
-    var h = 0x811c9dc5
-    if (key != null) {
-      val bytes = key.getBytes
-      var i = 0
-      while (i < bytes.length) {
-        h = (h ^ (bytes(i) & 0xff)) * 0x01000193
-        i += 1
-      }
-    }
-    java.lang.Math.floorMod(h, numPartitions)
   }
 }
 

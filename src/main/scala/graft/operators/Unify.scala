@@ -147,7 +147,7 @@ object Unify {
   /** Watermark-simulation DEAD-LETTER audit over an arrival-ordered
     * event log — the batch analog of the streaming operator's
     * `numRowsDroppedByWatermark` ([[graft.streaming
-    * .OrderUnifyEventTime.unifyObserved]]), but REPORTING the would-be
+    * .OrderUnifyEventTime.unify]]), but REPORTING the would-be
     * drops instead of silently filtering them. The watermark an event
     * meets on arrival is the max event time of everything that
     * arrived STRICTLY BEFORE it (by `arr`) minus the delay; the event

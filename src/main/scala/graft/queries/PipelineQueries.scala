@@ -599,7 +599,7 @@ object PipelineQueries {
 
   /** Late-data DEAD-LETTER audit — the batch analog of the streaming
     * operator's `numRowsDroppedByWatermark`
-    * ([[graft.streaming.OrderUnifyEventTime.unifyObserved]]): a
+    * ([[graft.streaming.OrderUnifyEventTime.unify]]): a
     * watermark SIMULATION over an arrival-ordered log that reports the
     * would-be drops instead of silently filtering them. The stored
     * event log is time-sorted, so arrival order models ingest jitter

@@ -40,9 +40,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale honesty: this source exists to VERIFY the contract in-sandbox
   * — the index lives in the streaming query's memory and is rebuilt
   * by one full scan per log after a restart, and the sink helper
-  * appends through one writer per partition file. The production path stays the Kafka
-  * connector (`OrderUnifyPipeline.kafkaSource/kafkaSink`); the
-  * pipeline code between source and sink is identical for both. */
+  * collects each batch to the driver and appends it through the
+  * producer's own write routine. The production path stays the Kafka
+  * connector (`OrderUnifyPipeline.kafkaSource`, and `kafkaSink`'s
+  * producer writing from the executors); the pipeline code between
+  * source and sink is identical for both. */
 object FileTopics {
 
   val Schema: StructType = new StructType()
@@ -51,18 +53,24 @@ object FileTopics {
     .add("offset", LongType)
 
   /** Kafka's routing invariant: same key ⇒ same partition. Stable
-    * FNV-1a over the key's UTF-8 bytes (documented, engine-neutral —
-    * NOT Kafka's murmur2; the contract is the invariant, not the
-    * specific hash). Delegates to the single static loop behind the
-    * codegen'd [[graft.functions.FnvPartition]] sink expression, so
-    * producer-side and sink-side routing can never diverge. A null
-    * key (permitted by Kafka's record contract) routes like the empty
-    * key — deterministically, never an NPE. */
-  def partitionFor(key: String, numPartitions: Int): Int =
-    graft.functions.FnvPartition.compute(
-      if (key == null) null
-      else org.apache.spark.unsafe.types.UTF8String.fromString(key),
-      numPartitions)
+    * FNV-1a over the key's UTF-8 bytes, `floorMod` the partition count
+    * (documented, engine-neutral — NOT Kafka's murmur2; the contract is
+    * the invariant, not the specific hash). The producer and the sink
+    * both route through it. A null key (permitted by Kafka's record
+    * contract) hashes like the empty key — deterministically, never an
+    * NPE. */
+  def partitionFor(key: String, numPartitions: Int): Int = {
+    var h = 0x811c9dc5
+    if (key != null) {
+      val bytes = key.getBytes("UTF-8")
+      var i = 0
+      while (i < bytes.length) {
+        h = (h ^ (bytes(i) & 0xff)) * 0x01000193
+        i += 1
+      }
+    }
+    java.lang.Math.floorMod(h, numPartitions)
+  }
 
   // null keys encode as the empty string (the log format has no null
   // marker; a null-keyed record degrades to empty-keyed, same routing)
@@ -91,18 +99,23 @@ object FileTopics {
   def append(root: String, topic: String, numPartitions: Int,
       records: Seq[(String, String)]): Unit = synchronized {
     records.groupBy { case (k, _) => partitionFor(k, numPartitions) }
-      .foreach { case (p, recs) =>
-        val f = logFile(root, topic, p)
-        f.getParentFile.mkdirs()
-        val out = new java.io.FileOutputStream(f, true)
-        try {
-          val sb = new StringBuilder
-          recs.foreach { case (k, v) =>
-            sb.append(enc(k)).append('\t').append(enc(v)).append('\n')
-          }
-          out.write(sb.toString.getBytes("UTF-8"))
-        } finally out.close()
+      .foreach { case (p, recs) => appendLines(root, topic, p, recs) }
+  }
+
+  /** The one log writer: appends `records` to log `p` of `topic` as
+    * URL-encoded `key TAB value` lines, in one write. */
+  private def appendLines(root: String, topic: String, p: Int,
+      records: Iterable[(String, String)]): Unit = synchronized {
+    val f = logFile(root, topic, p)
+    f.getParentFile.mkdirs()
+    val out = new java.io.FileOutputStream(f, true)
+    try {
+      val sb = new StringBuilder
+      records.foreach { case (k, v) =>
+        sb.append(enc(k)).append('\t').append(enc(v)).append('\n')
       }
+      out.write(sb.toString.getBytes("UTF-8"))
+    } finally out.close()
   }
 
   /** Current (topic, partition) → record-count map — the "latest
@@ -227,60 +240,43 @@ object FileTopics {
   }
 
   /** Kafka-sink stand-in with key-routed partitions: call from
-    * `foreachBatch`. Rows are routed to their partition on executors
-    * (one exchange on the partition id — no driver collect) and each
-    * partition file has exactly one writer per batch. Routing is the
-    * native codegen'd [[graft.functions.FnvPartition]] Column
-    * expression — the sink projection stays inside whole-stage codegen
-    * (no per-row Scala UDF), and null keys route like the empty key
-    * instead of NPE-ing.
+    * `foreachBatch`. The batch's `key`/`value` are collected to the
+    * driver in one job, routed with [[partitionFor]] and appended per
+    * partition through the producer's write routine, so the sink adds
+    * no stage or exchange of its own to the batch's plan. Null keys
+    * route and encode like the empty key.
     *
     * Idempotent per (query id, batch id): a restarted query replays
     * its last uncommitted batch under the same id, so each partition
     * keeps a ledger `<root>/<topic>/_sink/<query id>.p<k>` holding the
     * last batch id appended to it (written after the append), and a
-    * batch at or below it is skipped. The ids are the local properties
-    * Spark's micro-batch thread sets (`sql.streaming.queryId`,
-    * `streaming.sql.batchId`) and `foreachBatch` runs on; a call
-    * outside a streaming query has neither and always appends. A crash
-    * between an append and its ledger write still replays that one
-    * partition's rows. */
+    * batch at or below it is skipped. The batch is collected even then,
+    * so a replayed batch runs its stateful stage as any other. The ids
+    * are the local properties Spark's micro-batch thread sets
+    * (`sql.streaming.queryId`, `streaming.sql.batchId`) and
+    * `foreachBatch` runs on; a call outside a streaming query has
+    * neither and always appends. A crash between an append and its
+    * ledger write still replays that one partition's rows. */
   def sinkBatch(root: String, topic: String, numPartitions: Int)(
       batch: DataFrame): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graftshim.ColumnShim
+    import org.apache.spark.sql.functions.col
     val sc = batch.sparkSession.sparkContext
     val ids = for {
       q <- Option(sc.getLocalProperty("sql.streaming.queryId"))
       b <- Option(sc.getLocalProperty("streaming.sql.batchId"))
     } yield (q, b.toLong)
-    val keyCol = col("key").cast("string")
-    val routed = batch
-      .select(keyCol.as("key"), col("value").cast("string").as("value"),
-        ColumnShim.column(graft.functions.FnvPartition(
-          ColumnShim.expression(keyCol), numPartitions)).as("p"))
-      .repartition(numPartitions, col("p"))
-    routed.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-      it.toSeq.groupBy(_.getInt(2)).foreach { case (p, rows) =>
+    batch.select(col("key").cast("string"), col("value").cast("string"))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+      .groupBy { case (k, _) => partitionFor(k, numPartitions) }
+      .foreach { case (p, recs) =>
         val ledger = ids.map { case (q, b) =>
           (java.nio.file.Paths.get(root, topic, "_sink", s"$q.p$p"), b)
         }
         if (ledger.forall { case (l, b) => lastSunk(l) < b }) {
-          val f = logFile(root, topic, p)
-          f.getParentFile.mkdirs()
-          val out = new java.io.FileOutputStream(f, true)
-          try {
-            val sb = new StringBuilder
-            rows.foreach { r =>
-              sb.append(enc(r.getString(0))).append('\t')
-                .append(enc(r.getString(1))).append('\n')
-            }
-            out.write(sb.toString.getBytes("UTF-8"))
-          } finally out.close()
+          appendLines(root, topic, p, recs)
           ledger.foreach { case (l, b) => recordSunk(l, b) }
         }
       }
-    }
   }
 
   private def lastSunk(ledger: java.nio.file.Path): Long =

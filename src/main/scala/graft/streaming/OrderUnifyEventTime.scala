@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import scala.collection.mutable.ListBuffer
+import OrderUnifyPipeline.{pendingEnc, resultEnc, stringEnc}
 
 /** EVENT-TIME variant of the unify operator. The reference is
   * wall-clock-only (`OrderProjectionTransformer.java:61-68` anchors the
@@ -44,38 +44,20 @@ import scala.collection.mutable.ListBuffer
 object OrderUnifyEventTime {
 
   /** Process one group's arrivals (arrival order = `seq`). Pure and
-    * watermark-free: membership depends only on the events. */
+    * watermark-free: membership depends only on the events. Each
+    * arrival runs [[OrderUnify.onEvents]] with its own event time as
+    * the clock, so the G1/G2/G7 branches are the processing-time ones. */
   def onEvents(
       orderId: String,
       arrivals: Seq[OrderEvent],
       prior: Option[PendingOrder],
-      windowMillis: Long): (Seq[ProjectionResult], Option[PendingOrder]) = {
-    val emitted = ListBuffer.empty[ProjectionResult]
-    var pending = prior
-    arrivals.foreach { ev =>
-      val evMs = ev.timestampMicros / 1000L
-      pending match {
-        case Some(p) if OrderUnify.isCorrupt(p) ||
-            evMs >= p.deadlineEpochMillis =>
-          // G7-ET — the event's own time is past the open window:
-          // flush, then fresh buffer anchored at this event's time
-          if (!OrderUnify.isCorrupt(p))
-            emitted ++= OrderUnify.completeProjection(orderId, p)
-          pending = Some(PendingOrder(Map(ev.eventType -> ev),
-            evMs + windowMillis))
-        case Some(p) =>
-          // G2 — first arrival per type wins (an out-of-order event
-          // with an earlier event time still only fills an EMPTY slot)
-          if (!p.events.contains(ev.eventType))
-            pending = Some(p.copy(events = p.events + (ev.eventType -> ev)))
-        case None =>
-          // G1-ET — deadline anchored at this event's EVENT time
-          pending = Some(PendingOrder(Map(ev.eventType -> ev),
-            evMs + windowMillis))
-      }
+      windowMillis: Long): (Seq[ProjectionResult], Option[PendingOrder]) =
+    arrivals.foldLeft((Seq.empty[ProjectionResult], prior)) {
+      case ((emitted, pending), ev) =>
+        val (out, next) = OrderUnify.onEvents(orderId, Seq(ev), pending,
+          ev.timestampMicros / 1000L, windowMillis)
+        (emitted ++ out, next)
     }
-    (emitted.toSeq, pending)
-  }
 
   /** The `flatMapGroupsWithState` function (EventTimeTimeout). */
   def stateFunc(windowMillis: Long)(
@@ -105,25 +87,16 @@ object OrderUnifyEventTime {
 
   implicit private val timedEnc: Encoder[TimedOrderEvent] =
     Encoders.product[TimedOrderEvent]
-  implicit private val pendingEnc: Encoder[PendingOrder] =
-    Encoders.product[PendingOrder]
-  implicit private val resultEnc: Encoder[ProjectionResult] =
-    Encoders.product[ProjectionResult]
-  implicit private val stringEnc: Encoder[String] = Encoders.STRING
 
   /** Pipeline adapter: watermark on the parsed event time, then the
     * event-time unify. `watermarkDelay` is the lateness tolerance —
     * events later than it MAY be expired before they arrive (their
     * fresh G7-ET buffer then drops as incomplete), exactly Spark's
-    * standard watermark contract. */
-  def unify(events: Dataset[OrderEvent],
-            windowMillis: Long = OrderUnify.DefaultBufferMillis,
-            watermarkDelay: String = "2 seconds"): Dataset[ProjectionResult] =
-    unifyObserved(events, windowMillis, watermarkDelay)
-
-  /** As [[unify]], with LATE-DATA OBSERVABILITY wired in — the
-    * event-time edition of the reference's "incomplete … dropped" log
-    * line. Two signals a production operator watches:
+    * standard watermark contract.
+    *
+    * LATE-DATA OBSERVABILITY is wired in — the event-time edition of
+    * the reference's "incomplete … dropped" log line. Two signals a
+    * production operator watches:
     *
     *  - the `unify_et_arrivals` observe metric counts every arrival
     *    that reaches the operator (it sits ABOVE the stateful node's
@@ -139,7 +112,7 @@ object OrderUnifyEventTime {
     * [[graft.operators.Unify.lateAudit]] (`q_unify_late_audit`): a
     * watermark simulation over an arrival-ordered log that REPORTS
     * would-be-dropped events instead of silently filtering them. */
-  def unifyObserved(events: Dataset[OrderEvent],
+  def unify(events: Dataset[OrderEvent],
             windowMillis: Long = OrderUnify.DefaultBufferMillis,
             watermarkDelay: String = "2 seconds"): Dataset[ProjectionResult] =
     events

@@ -174,7 +174,8 @@ object OrderUnifyPipeline {
     * records are keyed by order-id, `test-consumer-app/main.go:302-304`).
     * Requires the spark-sql-kafka connector on the classpath (not
     * present in this build environment, which also has no broker —
-    * tests drive the same pipeline through [[recordSource]]). */
+    * tests drive the same pipeline through a MemoryStream of
+    * [[SourceRecord]] or [[graft.sources.FileTopics.source]]). */
   def kafkaSource(spark: SparkSession, bootstrap: String): DataFrame =
     spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrap)
@@ -185,11 +186,6 @@ object OrderUnifyPipeline {
         col("value").cast("string").as("value"),
         col("topic"),
         col("offset").as("seq"))
-
-  /** Wrap any kafka-shaped streaming DataFrame (e.g. a MemoryStream of
-    * [[SourceRecord]]) — test/demo source. */
-  def recordSource(records: Dataset[SourceRecord]): DataFrame =
-    records.toDF()
 
   /** Full pipeline: source records -> projections. `failFast` selects
     * the malformed-JSON policy (see [[parseAndCanonicalize]]). */

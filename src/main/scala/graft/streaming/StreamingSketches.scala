@@ -21,26 +21,30 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
   * grow), so downstream consumers may keep latest-wins. */
 object StreamingSketches {
 
+  /** Big-endian 32-bit chunks `0 until n` of the md5 of `key`'s UTF-8
+    * bytes — the hash recipe the batch sketches share. */
+  private def md5Chunks(key: String, n: Int): Array[Long] = {
+    val d = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8"))
+    Array.tabulate(n) { i =>
+      var v = 0L
+      var k = 0
+      while (k < 4) { v = (v << 8) | (d(i * 4 + k) & 0xffL); k += 1 }
+      v
+    }
+  }
+
   /** JVM-side replay of the engine's HLL register recipe
     * ([[graft.operators.Sketches.hllRegisters]]): md5 the UTF-8 key
     * bytes, big-endian 32-bit chunk 0 mod 256 is the register index,
     * the 1-based leading-zero rank of chunk 1 (33 for zero) is the
     * observation. */
   def registerOf(key: String): (Int, Int) = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8"))
-    def chunk(i: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < 4) { v = (v << 8) | (d(i * 4 + k) & 0xffL); k += 1 }
-      v
-    }
-    val idx = (chunk(0) % 256).toInt
-    val c1 = chunk(1)
+    val Array(c0, c1) = md5Chunks(key, 2)
     val rank =
       if (c1 == 0L) 33
       else java.lang.Long.numberOfLeadingZeros(c1) - 31
-    (idx, rank)
+    ((c0 % 256).toInt, rank)
   }
 
   /** Raw HLL estimate in floor'd milli-units from a 256-register
@@ -80,20 +84,9 @@ object StreamingSketches {
   /** JVM-side replay of the batch Bloom recipe
     * ([[graft.operators.Bloom]]): the 4 bit positions of a key are
     * the big-endian 32-bit md5 chunks mod 2^18. */
-  def bloomPositions(key: String): Array[Int] = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8"))
-    val out = new Array[Int](graft.operators.Bloom.NumHashes)
-    var i = 0
-    while (i < out.length) {
-      var v = 0L
-      var k = 0
-      while (k < 4) { v = (v << 8) | (d(i * 4 + k) & 0xffL); k += 1 }
-      out(i) = (v % graft.operators.Bloom.NumBits).toInt
-      i += 1
-    }
-    out
-  }
+  def bloomPositions(key: String): Array[Int] =
+    md5Chunks(key, graft.operators.Bloom.NumHashes)
+      .map(v => (v % graft.operators.Bloom.NumBits).toInt)
 
   /** Streaming Bloom membership filter: `(group, key)` pairs fold
     * into a per-group 2^18-bit filter held in `mapGroupsWithState`
@@ -183,20 +176,9 @@ object StreamingSketches {
   /** JVM-side replay of the batch count-min position recipe
     * ([[graft.operators.Sketches.positions]]): hash row i of a key is
     * the big-endian 32-bit md5 chunk i mod Width. */
-  def cmsPositions(key: String): Array[Int] = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8"))
-    val out = new Array[Int](graft.operators.Sketches.Depth)
-    var i = 0
-    while (i < out.length) {
-      var v = 0L
-      var k = 0
-      while (k < 4) { v = (v << 8) | (d(i * 4 + k) & 0xffL); k += 1 }
-      out(i) = (v % graft.operators.Sketches.Width).toInt
-      i += 1
-    }
-    out
-  }
+  def cmsPositions(key: String): Array[Int] =
+    md5Chunks(key, graft.operators.Sketches.Depth)
+      .map(v => (v % graft.operators.Sketches.Width).toInt)
 
   /** Canonical digest of a CMS counter array (all Depth×Width cells,
     * zeros included, comma-joined decimals) — the register-equality

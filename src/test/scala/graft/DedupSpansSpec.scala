@@ -12,8 +12,7 @@ class DedupSpansSpec extends AnyFunSuite {
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("spansdocs")
-      .toFile.getAbsolutePath
+    val tmp = graft.TestSpark.tempDir("spansdocs")
     rows.map { case (id, text) => (id, text, "en", "synth", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")

@@ -40,8 +40,7 @@ class ExtensionOpsSpec extends AnyFunSuite {
 
   test("q_abtest_stats: a 0/1-event arm yields NULL t, never NaN/divide-by-zero") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("abtest_degenerate")
-      .toFile.getAbsolutePath
+    val tmp = graft.TestSpark.tempDir("abtest_degenerate")
     // (event_id, user_id, event_type, value, ts): type "solo" has one
     // arm with a single event (n-1 = 0 variance denominator), type
     // "both" has 2+ events per arm

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +19,7 @@ class PrivacySpec extends AnyFunSuite {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = Files.createTempDirectory("privacy_spec").toString
+    val d = graft.TestSpark.tempDir("privacy_spec")
     val rows = Seq(
       // user 1: 2 clicks + 2 views (tie), 2 days, 40000 cents
       (1L, ts(1), 1L, "click", 100.0, "{}"),

@@ -30,10 +30,8 @@ class Round6Spec extends AnyFunSuite {
 
   test("q_dataset_merkle: a changed doc changes its shard digest and the root") {
     import spark.implicits._
-    val tmpA = java.nio.file.Files.createTempDirectory("merkle_a")
-      .toFile.getAbsolutePath
-    val tmpB = java.nio.file.Files.createTempDirectory("merkle_b")
-      .toFile.getAbsolutePath
+    val tmpA = graft.TestSpark.tempDir("merkle_a")
+    val tmpB = graft.TestSpark.tempDir("merkle_b")
     def write(dir: String, textOf300: String): Unit =
       Seq((0L, "alpha beta"), (1L, "gamma delta"), (300L, textOf300))
         .toDF("doc_id", "text")

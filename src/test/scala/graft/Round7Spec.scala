@@ -13,8 +13,7 @@ class Round7Spec extends AnyFunSuite {
   /** Minimal documents table with the full production schema. */
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("r7docs")
-      .toFile.getAbsolutePath
+    val tmp = graft.TestSpark.tempDir("r7docs")
     rows.map { case (id, text, lang, source) =>
       (id, text, lang, source, text.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -13,10 +13,23 @@ object TestSpark {
     * fresh temp dir per test JVM, deleted on exit. */
   def checkpointDir: String = checkpointRoot
 
-  private val checkpointRoot: String = {
-    val base = new java.io.File(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else sys.props("java.io.tmpdir"))
-    val dir = java.nio.file.Files.createTempDirectory(base.toPath, "graft-ckpt-").toFile
+  private val checkpointRoot: String = deletedOnExit(
+    if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else sys.props("java.io.tmpdir"),
+    "graft-ckpt-")
+
+  /** A fresh directory named `prefix…` for one test's files, under a
+    * per-JVM root in `java.io.tmpdir` that is deleted on exit, as the
+    * checkpoint root is. */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(tempRoot), prefix)
+      .toFile.getAbsolutePath
+
+  private lazy val tempRoot: String = deletedOnExit(sys.props("java.io.tmpdir"), "graft-tmp-")
+
+  /** A fresh temp dir under `base`, deleted with its contents on exit. */
+  private def deletedOnExit(base: String, prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(base), prefix).toFile
     sys.addShutdownHook(deleteRecursively(dir))
     dir.getAbsolutePath
   }

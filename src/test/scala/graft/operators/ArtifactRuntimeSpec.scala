@@ -12,7 +12,7 @@ class ArtifactRuntimeSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toFile.getAbsolutePath
+    graft.TestSpark.tempDir(prefix)
 
   /** Writes `<dir>/t.parquet/<name>` files of the given sizes and
     * mtimes. */

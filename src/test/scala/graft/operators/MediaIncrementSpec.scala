@@ -31,8 +31,7 @@ class MediaIncrementSpec extends AnyFunSuite {
   }
 
   test("append adds one partition's rows without rewriting existing files") {
-    val base = java.nio.file.Files.createTempDirectory("mediainc")
-      .toFile.getAbsolutePath
+    val base = graft.TestSpark.tempDir("mediainc")
     val dirA = s"$base/a"; val dirAB = s"$base/ab"
     writeDocs(dirA, 0 until 5)
     writeDocs(dirAB, 0 until 8)

@@ -39,7 +39,7 @@ class FileSchemaRegistrySpec extends AnyFunSuite {
   }"""
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("schemareg").toFile.getAbsolutePath
+    graft.TestSpark.tempDir("schemareg")
 
   test("register/evolve: monotone versions, global ids, idempotent re-register") {
     val root = tmp()

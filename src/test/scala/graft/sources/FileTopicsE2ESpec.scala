@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +17,7 @@ class FileTopicsE2ESpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toFile.getAbsolutePath
+    graft.TestSpark.tempDir(prefix)
 
   private def evJson(id: String, typ: String): String =
     s"""{"order-id":"$id","type":"$typ","timestamp":"2024-08-16T15:51:19.799Z","order_details":{"d":1}}"""
@@ -107,6 +108,59 @@ class FileTopicsE2ESpec extends AnyFunSuite {
     assert(sunk().sorted == (b7 :+ (("a", "4"))).sorted)
     // the ledger files are not partition logs: offsets count records only
     assert(FileTopics.latestOffsets(root, Seq("out")).values.sum == 4L)
+  }
+
+  test("null key routes like the empty key, deterministically (no NPE)") {
+    assert(FileTopics.partitionFor(null, 3) == FileTopics.partitionFor("", 3))
+  }
+
+  test("sinkBatch writes null-keyed rows as empty-keyed records") {
+    import spark.implicits._
+    val root = tmp("ftopics-nullkey")
+    val batch = Seq(("k1", "v1"), (null: String, "v-null"), ("", "v-empty"))
+      .toDF("key", "value")
+    FileTopics.sinkBatch(root, "t", 3)(batch)
+    val read = (0 until 3).flatMap { p =>
+      FileTopics.readRange(root, "t", p, 0L, Long.MaxValue)
+        .map { case (k, v, _) => (k, v, p) }
+    }.toSet
+    // null key degrades to empty key (documented), same partition as ""
+    val pEmpty = FileTopics.partitionFor("", 3)
+    assert(read == Set(
+      ("k1", "v1", FileTopics.partitionFor("k1", 3)),
+      ("", "v-null", pEmpty),
+      ("", "v-empty", pEmpty)))
+  }
+
+  test("sinkBatch runs a narrow batch in one stage: no exchange of its own") {
+    val root = tmp("ftopics-stages")
+    val sc = spark.sparkContext
+    val group = "filetopics-sink-stages"
+    val marker = "filetopics-sink-marker"
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    def groupOf(props: java.util.Properties): String =
+      Option(props).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties) == group) stages.incrementAndGet()
+      // listener events arrive in order: once the marker job starts,
+      // every stage the sink submitted before it has been counted
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (groupOf(e.properties) == marker) drained.countDown()
+    }
+    val batch = spark.range(0, 100, 1, 4)
+      .selectExpr("CAST(id % 7 AS STRING) AS key", "CAST(id AS STRING) AS value")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "sinkBatch")
+      try FileTopics.sinkBatch(root, "out", 3)(batch) finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener drain")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(stages.get == 1, s"sinkBatch submitted ${stages.get} stages")
+    assert(FileTopics.latestOffsets(root, Seq("out")).values.sum == 100L)
   }
 
   test("TWS default path through the contract: RocksDB session, file source -> unify -> sink") {

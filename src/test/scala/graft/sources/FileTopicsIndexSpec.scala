@@ -14,7 +14,7 @@ class FileTopicsIndexSpec extends AnyFunSuite {
   private val Tp = (Topic, 0)
 
   private def tmp(): String =
-    Files.createTempDirectory("ftopics-index").toFile.getAbsolutePath
+    graft.TestSpark.tempDir("ftopics-index")
 
   private def raw(root: String, s: String): Unit = {
     val f = FileTopics.logFile(root, Topic, 0).toPath

@@ -47,7 +47,7 @@ class HttpSchemaRegistrySpec extends AnyFunSuite {
   }"""
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toFile.getAbsolutePath
+    graft.TestSpark.tempDir(prefix)
 
   private def withServer[A](f: (HttpSchemaRegistryClient, String) => A): A = {
     val root = tmp("httpreg")

@@ -25,10 +25,7 @@ class PartitionPruningSpec extends AnyFunSuite {
     plan.collectFirst { case f: FileSourceScanExec => f }
 
   test("partition-column filter prunes partitions at the scan") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-partitioned-").toFile
-    base.deleteOnExit()
-    val out = base.getAbsolutePath + "/documents_by_source"
+    val out = graft.TestSpark.tempDir("graft-partitioned-") + "/documents_by_source"
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     docs.write.partitionBy("source").parquet(out)
 

@@ -177,7 +177,7 @@ class OrderUnifyEventTimeSpec extends AnyFunSuite {
     // arrival, and the dropped key never reaches the sink.
     val input = MemoryStream[SourceRecord]
     val name = nextName()
-    val out = OrderUnifyEventTime.unifyObserved(
+    val out = OrderUnifyEventTime.unify(
       OrderUnifyPipeline.parseAndCanonicalize(input.toDF()),
       windowMillis = 1000, watermarkDelay = "2 seconds")
     val query: StreamingQuery = out.writeStream
