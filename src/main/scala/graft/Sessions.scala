@@ -20,9 +20,10 @@ object Sessions {
   }
 
   /** The shared base settings: `local[cpus]`, one shuffle partition per
-    * core, AQE on, UTC session time zone, UI off, and the RocksDB
+    * core, AQE on, UTC session time zone, UI off, the RocksDB
     * state-store provider the unify operator's `transformWithState`
-    * needs. */
+    * needs, and parquet TIMESTAMP(NANOS) read as long, which
+    * `Tables` converts to microseconds. */
   def builder(app: String, cpus: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -33,6 +34,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** The base settings on `local[Sessions.cpus]`, at log level ERROR. */
   def local(app: String): SparkSession = {

@@ -36,7 +36,8 @@ object Tables {
     // without UTC adjustment (which Spark reads as TIMESTAMP_NTZ — cast
     // to session-TZ timestamp; the session TZ is pinned UTC so the cast
     // is value-preserving). Branch on the landed type so both work.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // The nanos-as-long read needs `spark.sql.legacy.parquet.nanosAsLong`,
+    // which `Sessions.builder` sets; a load never changes the session.
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (name == "events") {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}

@@ -19,4 +19,13 @@ class SessionsSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"))
     }
   }
+
+  test("Tables.load leaves the session's nanos-as-long setting as it is") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(TestSpark.spark.conf.get(key) == "true", "a base setting of Sessions.builder")
+    val s = TestSpark.spark.newSession()
+    s.conf.set(key, "false")
+    assert(Tables(s, "/root/testdata/sf0.001", "region").count() > 0)
+    assert(s.conf.get(key) == "false")
+  }
 }

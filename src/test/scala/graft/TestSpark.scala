@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** One shared local session for all suites. */
 object TestSpark {
@@ -51,9 +53,10 @@ object TestSpark {
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       // No state-store maintenance during a run: it snapshots and
       // cleans up on a background thread beside rapid-trigger tests.
-      // The stores of stopped queries stay loaded until the JVM exits;
-      // under RocksDB the suite's peak RSS measured within 2% of the
-      // HDFS-backed provider's.
+      // Maintenance is also what unloads the stores of stopped queries,
+      // so each streaming suite unloads them when it ends
+      // (`StreamingSuite`); else every RocksDB store a query opened
+      // keeps its files open until the JVM exits.
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
       .config("spark.sql.streaming.minBatchesToRetain", "2")
       .config("spark.sql.streaming.checkpointLocation", checkpointRoot)
@@ -61,4 +64,12 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+}
+
+/** A suite that runs streaming queries: when it ends, the state stores
+  * its stopped queries loaded are closed (`TestSpark`'s maintenance
+  * interval never unloads them). */
+trait StreamingSuite extends BeforeAndAfterAll { this: Suite =>
+  override protected def afterAll(): Unit =
+    try StateStore.stop() finally super.afterAll()
 }

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * executed through [[FileTopics]]'s real DataSource-V2
   * MicroBatchStream against the SAME pipeline code the Kafka
   * connector would feed. */
-class FileTopicsE2ESpec extends AnyFunSuite {
+class FileTopicsE2ESpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
 
   private def tmp(prefix: String): String =

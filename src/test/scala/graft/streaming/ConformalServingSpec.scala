@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the batch decisions for the same docs under any arrival batching,
   * and loosening the threshold can only widen prediction sets
   * (route monotonicity). */
-class ConformalServingSpec extends AnyFunSuite {
+class ConformalServingSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * streamed decisions must equal batch decisions under any arrival
   * batching, and raising the normalizer can only REJECT more
   * (acceptance monotonicity). */
-class DsirServingSpec extends AnyFunSuite {
+class DsirServingSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

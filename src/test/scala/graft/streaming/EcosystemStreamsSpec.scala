@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Ecosystem surfaces (P5/P6/X1/X2): batch semantics + a streaming
   * smoke through MemoryStream (stateless transforms need no timers, so
   * processAllAvailable is safe here). */
-class EcosystemStreamsSpec extends AnyFunSuite {
+class EcosystemStreamsSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * so streamed top-k must equal the batch top-k for the same query
   * set regardless of arrival batching — the NbServingSpec convention
   * applied to the ANN tier. */
-class GraphServingSpec extends AnyFunSuite {
+class GraphServingSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

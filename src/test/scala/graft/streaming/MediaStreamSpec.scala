@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stateless per record, so streamed metadata must equal batch
   * metadata under any arrival batching — the ingest-side media QA
   * job. */
-class MediaStreamSpec extends AnyFunSuite {
+class MediaStreamSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

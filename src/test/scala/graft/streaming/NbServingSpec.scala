@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.operators.Classify.nbPredict]]. Streamed predictions must
   * equal the batch predictions for the same docs (the model is frozen;
   * arrival batching cannot change an argmax). */
-class NbServingSpec extends AnyFunSuite {
+class NbServingSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

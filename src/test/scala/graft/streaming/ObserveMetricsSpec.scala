@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** S7 observability: the parse stage surfaces record/drop counts as an
   * observed metric (the engine's replacement for the reference's
   * crash-on-malformed policy). */
-class ObserveMetricsSpec extends AnyFunSuite {
+class ObserveMetricsSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

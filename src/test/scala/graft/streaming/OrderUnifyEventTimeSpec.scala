@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sleeps, no timing races. Two nudge rounds per drain: the first
   * batch advances the watermark at its end, the second fires the
   * timeouts. */
-class OrderUnifyEventTimeSpec extends AnyFunSuite {
+class OrderUnifyEventTimeSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

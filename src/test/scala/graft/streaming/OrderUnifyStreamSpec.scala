@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `processAllAvailable` can block indefinitely (noNewData never
   * latches). We therefore drive purely by wall-clock: add data, sleep
   * past the deadline + a trigger cushion, then read the sink table. */
-class OrderUnifyStreamSpec extends AnyFunSuite {
+class OrderUnifyStreamSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

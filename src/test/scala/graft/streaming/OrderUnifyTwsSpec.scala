@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end checks of the default (`transformWithState`) unify
   * operator's explicit-timer semantics. */
-class OrderUnifyTwsSpec extends AnyFunSuite {
+class OrderUnifyTwsSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

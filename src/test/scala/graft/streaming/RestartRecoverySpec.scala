@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * foreachBatch sink applies each (batchId, partition of updates)
   * idempotently, so a replayed batch after a crash-restart cannot
   * double-apply. */
-class RestartRecoverySpec extends AnyFunSuite {
+class RestartRecoverySpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

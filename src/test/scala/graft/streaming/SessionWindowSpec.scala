@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the state behavior fixed windows never exhibit;
   *  - append-mode emission: a session emits exactly once, only after
   *    the watermark passes its end. */
-class SessionWindowSpec extends AnyFunSuite {
+class SessionWindowSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext =

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    stream-wide);
   *  - distinct event types of one order all pass (the key is the
   *    pair, not the order id). */
-class StreamDedupSpec extends AnyFunSuite {
+class StreamDedupSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext =

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * 100 TB/day stream's dedup state finite) and a stream-stream
   * event-time interval join (both sides watermarked so the join state
   * is also bounded). */
-class StreamJoinDedupSpec extends AnyFunSuite {
+class StreamJoinDedupSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

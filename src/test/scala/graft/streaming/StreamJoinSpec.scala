@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - batching invariance: one-shot delivery and drip-fed delivery
   *    produce identical result sets (event-time semantics — arrival
   *    timing decides only WHEN rows emit). */
-class StreamJoinSpec extends AnyFunSuite {
+class StreamJoinSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext =

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * guards exactly-onceness at volume; the streaming throughput and
   * latency figures come from the order-unify benchmark in `perfbench/`
   * (baseline in `perfbench/README.md`). */
-class StreamThroughputSpec extends AnyFunSuite {
+class StreamThroughputSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator (and therefore the DuckDB oracle) computes over the same
   * data, regardless of how arrival is micro-batched — the property
   * that lets a streaming head serve while a batch job backfills. */
-class StreamingSketchSpec extends AnyFunSuite {
+class StreamingSketchSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * counterpart of q_window_time (SURVEY.md §2.6 gap closure). Append
   * mode only emits a window once the watermark passes its end, so
   * feeding late-enough events closes earlier windows deterministically. */
-class WindowedStreamSpec extends AnyFunSuite {
+class WindowedStreamSpec extends AnyFunSuite with graft.StreamingSuite {
   private lazy val spark = graft.TestSpark.spark
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
