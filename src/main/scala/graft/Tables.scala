@@ -14,7 +14,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Memoized RESOLVED relation per (session, dir, table) — round 13.
+  // Memoized RESOLVED relation per (session, parquet path), for the
+  // tables here and every artifact part (`Artifacts.read`) — round 13.
   // `spark.read.parquet` re-lists the directory and re-reads the
   // parquet footer for schema inference on EVERY call, so each of the
   // ~337 registry queries paid 1-2 driver-side listing/footer jobs per
@@ -23,10 +24,20 @@ object Tables {
   // logical plan — every action still scans the parquet data itself,
   // so this reuses metadata only, never results.
   private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  /** The relation at `path`, resolved by `load` on this session's
+    * first call only. */
+  def relation(spark: SparkSession, path: String)(load: => DataFrame): DataFrame =
+    relCache.computeIfAbsent((spark, path), _ => load)
+
+  /** Drop every memoized relation whose path starts with `prefix` (a
+    * cached FileIndex would otherwise point at deleted files). */
+  def forget(prefix: String): Unit =
+    relCache.keySet.removeIf(_._2.startsWith(prefix))
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    relCache.computeIfAbsent((spark, sfDir, name), _ => load(spark, sfDir, name))
+    relation(spark, s"$sfDir/$name.parquet")(load(spark, sfDir, name))
 
   private def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.parquet has shipped with two physical `ts` encodings across

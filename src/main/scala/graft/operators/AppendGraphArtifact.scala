@@ -32,13 +32,16 @@ import org.apache.spark.sql.functions._
   * the identical append steps from `embeddings`, and
   * [[AppendGraphArtifactSpec]] pins artifact-vs-direct row identity.
   * Parameters are pinned in the path. */
-object AppendGraphArtifact {
+object AppendGraphArtifact extends Artifact("nndappend", "embeddings",
+    s"_b${AppendGraphArtifact.Beam}_h${AppendGraphArtifact.Hops}" +
+    s"_l${AppendGraphArtifact.LocalRounds}_n${AppendGraphArtifact.BatchN}",
+    Seq("edges", "meta")) {
 
-  val Beam = 4
-  val Hops = 3
-  val LocalRounds = 1
+  final val Beam = 4
+  final val Hops = 3
+  final val LocalRounds = 1
   /** Batch size: the append batch is the last `BatchN` vectors. */
-  val BatchN = 8L
+  final val BatchN = 8L
 
   /** The exact inputs the inline query used: the corpus, the batch
     * boundary m = max(vec_id) − (BatchN − 1), and the base graph
@@ -54,9 +57,7 @@ object AppendGraphArtifact {
     (emb, m, baseE)
   }
 
-  private val spec = Artifact("nndappend", "embeddings",
-      s"_b${Beam}_h${Hops}_l${LocalRounds}_n$BatchN",
-      Seq("edges", "meta")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val (emb, m, baseE) = inputs(b.spark, b.dir)
     val res = Similarity.nnDescentAppend(emb, baseE, m,
       k = NndGraphArtifact.K, beam = Beam, hops = Hops, entry = 0L,
@@ -67,16 +68,11 @@ object AppendGraphArtifact {
     } finally res.unpersist()
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The integrated post-append graph `(qid, vec_id, cos, rnk)`. */
   def edges(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "edges")
+    read(spark, dir, "edges")
 
   /** The batch boundary: appended vectors are `vec_id >= m`. */
   def batchMinId(spark: SparkSession, dir: String): Long =
-    spec.first(spark, dir, "meta").getLong(0)
+    first(spark, dir, "meta").getLong(0)
 }

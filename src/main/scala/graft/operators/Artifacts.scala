@@ -11,10 +11,16 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 /** A materialized layout artifact, declared: a derived structure
   * written once as parquet `parts` under one root and consumed by many
   * registry queries (the co-occurrence edge list, the IVF index, …).
-  * The root is keyed by the source directory, a fingerprint of
-  * `sourceTable` (see [[Artifacts.path]]) and `keySuffix`, which pins
-  * the build parameters — so neither a regenerated dataset nor a
-  * parameter change can ever serve a stale artifact.
+  * Each artifact is an object extending this class. The root is keyed
+  * by the source directory, a fingerprint of `sourceTable` (see
+  * [[Artifacts.path]]) and `keySuffix`, which pins the build
+  * parameters — so neither a regenerated dataset nor a parameter change
+  * can ever serve a stale artifact.
+  *
+  * The constructor arguments are evaluated before the extending
+  * object's own vals are initialized: a `keySuffix` built from a member
+  * must use a constant (`final val K = 5`) or a value defined outside
+  * the object, or it reads the member's default (0 or null).
   *
   * `build` derives the parts from the source directory and writes each
   * one through [[Artifact.Build.write]]. [[Artifacts]] runs it at most
@@ -22,8 +28,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * skip-if-complete, and the first reader builds. A build may read
   * other artifacts (the chained IVF → kNN-edges → NN-descent tiers);
   * roots form a DAG, so the per-root locks cannot deadlock. */
-final case class Artifact(tag: String, sourceTable: String, keySuffix: String,
-    parts: Seq[String])(build: Artifact.Build => Unit) {
+abstract class Artifact(tag: String, sourceTable: String, keySuffix: String,
+    parts: Seq[String]) {
+
+  protected def build(b: Artifact.Build): Unit
 
   def path(dir: String): String =
     Artifacts.path(dir, sourceTable, tag) + keySuffix
@@ -63,8 +71,8 @@ object Artifact {
 }
 
 /** The one runtime behind every [[Artifact]]: fingerprinted roots,
-  * one lock per root, skip-if-complete builds, and the relation cache
-  * consumers read through. */
+  * one lock per root, skip-if-complete builds, and the memoized
+  * relations consumers read through. */
 object Artifacts {
 
   /** Directory holding every artifact root. */
@@ -75,20 +83,16 @@ object Artifacts {
     * and the next reader builds it again. */
   private val Marker = "_COMPLETE"
 
-  // Memoized RESOLVED relation per (session, artifact part path):
-  // `spark.read.parquet` re-lists the directory and re-reads the
-  // parquet footer on every call, and consumers re-call their accessor
-  // per branch. Metadata reuse only: every action still scans the
-  // parquet data.
-  private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private val rowCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Row]()
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
+  /** The part at `path`, through the one relation memo
+    * ([[graft.Tables.relation]]): consumers re-call their accessor per
+    * branch. */
   def read(spark: SparkSession, path: String): DataFrame =
-    relCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
+    graft.Tables.relation(spark, path)(spark.read.parquet(path))
 
   private[operators] def first(spark: SparkSession, path: String): Row =
     rowCache.computeIfAbsent((spark, path), _ => read(spark, path).head())
@@ -96,7 +100,7 @@ object Artifacts {
   /** Drop every cached relation under `root` (a cached FileIndex would
     * otherwise point at part files a rebuild deletes). */
   def invalidate(root: String): Unit = {
-    relCache.keySet.removeIf(_._2.startsWith(root))
+    graft.Tables.forget(root)
     rowCache.keySet.removeIf(_._2.startsWith(root))
   }
 

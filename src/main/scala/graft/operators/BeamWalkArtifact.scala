@@ -29,17 +29,18 @@ import org.apache.spark.sql.functions._
   * `embeddings`. Parameters are pinned in the path. At 100 TB this is
   * the production posture: a frozen index's fixed evaluation walk is
   * executed once, audits read the trace. */
-object BeamWalkArtifact {
+object BeamWalkArtifact extends Artifact("beamwalk", "embeddings",
+    s"_q${BeamWalkArtifact.QMin}_${BeamWalkArtifact.QMax}" +
+    s"_b${BeamWalkArtifact.Beam}_h${BeamWalkArtifact.Hops}_e${BeamWalkArtifact.Entry}",
+    Seq("seen", "cost")) {
 
-  val QMin = 8L
-  val QMax = 16L
-  val Beam = 4
-  val Hops = 4
-  val Entry = 0L
+  final val QMin = 8L
+  final val QMax = 16L
+  final val Beam = 4
+  final val Hops = 4
+  final val Entry = 0L
 
-  private val spec = Artifact("beamwalk", "embeddings",
-      s"_q${QMin}_${QMax}_b${Beam}_h${Hops}_e$Entry",
-      Seq("seen", "cost")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val (seen, cost) = Similarity.beamWalkTrace(
       graft.Tables.embeddings(b.spark, b.dir)
         .select(col("vec_id"), col("embedding")),
@@ -52,16 +53,11 @@ object BeamWalkArtifact {
     } finally seen.unpersist()
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The scored distinct seen set `(qid, vec_id, cos)`. */
   def seen(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "seen")
+    read(spark, dir, "seen")
 
   /** The per-query scored-candidate count `(qid, cand_scored)`. */
   def cost(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "cost")
+    read(spark, dir, "cost")
 }

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * re-enters. Rounds materialize eagerly (persist + count, previous
   * round released) so the plan stays shallow at any round count.
   * The round count is pinned in the path. */
-object BpeVocabArtifact {
+object BpeVocabArtifact extends Artifact("bpevocab", "documents",
+    s"_r${BpeVocabArtifact.Rounds}", Seq("merges", "reprs")) {
 
   // round 13: build-time (batch-only) lineage cut — eager
   // localCheckpoint keeps internal rows; Frames.snapshot's
@@ -31,7 +32,7 @@ object BpeVocabArtifact {
     df.localCheckpoint(true)
 
   /** Merge rounds — the learned-vocabulary size knob. */
-  val Rounds = 8
+  final val Rounds = 8
 
   private def pairCounts(r: DataFrame): DataFrame = r
     .select(col("f"), split(expr("trim(repr)"), "  ").as("tl"))
@@ -41,8 +42,7 @@ object BpeVocabArtifact {
       .as("pair"))
     .groupBy(col("pair")).agg(sum(col("f")).as("cnt"))
 
-  private val spec = Artifact("bpevocab", "documents", s"_r$Rounds",
-      Seq("merges", "reprs")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val words = graft.Tables.documents(b.spark, b.dir)
       .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
@@ -70,17 +70,12 @@ object BpeVocabArtifact {
       size(split(expr("trim(repr)"), "  ")).cast("long").as("n_symbols")))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The learned merge table `(merge_rank, pair, merged, cnt)`. */
   def merges(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "merges")
+    read(spark, dir, "merges")
 
   /** Every corpus word's decomposition under the learned rules:
     * `(w, repr, f, n_symbols)`. */
   def reprs(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "reprs")
+    read(spark, dir, "reprs")
 }

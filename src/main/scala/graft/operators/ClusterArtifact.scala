@@ -12,24 +12,18 @@ import graft.Tables
   * similarity parameters are pinned in the path. */
 object PairsArtifact {
 
-  private def spec(threshold: Double, maxDf: Int) =
-    Artifact("ndpairs", "documents",
-        s"_t${math.round(threshold * 100)}_d$maxDf", Seq("pairs")) { b =>
-      b.write("pairs", Dedup.jaccardPairs(Tables.documents(b.spark, b.dir),
-        threshold, maxDf = Some(maxDf)))
+  def apply(threshold: Double, maxDf: Int): Artifact =
+    new Artifact("ndpairs", "documents",
+        s"_t${math.round(threshold * 100)}_d$maxDf", Seq("pairs")) {
+      protected def build(b: Artifact.Build): Unit =
+        b.write("pairs", Dedup.jaccardPairs(Tables.documents(b.spark, b.dir),
+          threshold, maxDf = Some(maxDf)))
     }
-
-  def path(dir: String, threshold: Double, maxDf: Int): String =
-    spec(threshold, maxDf).path(dir)
-
-  def materialize(spark: SparkSession, dir: String,
-                  threshold: Double, maxDf: Int): String =
-    spec(threshold, maxDf).materialize(spark, dir)
 
   /** The pair list `(da, db, jaccard)`. */
   def pairs(spark: SparkSession, dir: String,
             threshold: Double, maxDf: Int): DataFrame =
-    spec(threshold, maxDf).read(spark, dir, "pairs")
+    apply(threshold, maxDf).read(spark, dir, "pairs")
 }
 
 /** Materialized dedup cluster-label table: connected components over
@@ -46,25 +40,19 @@ object ClusterArtifact {
 
   /** Min-label connected components over the materialized pair list
     * → `(doc_id, cluster)`. */
-  private def spec(threshold: Double, maxDf: Int) =
-    Artifact("dedupcc", "documents",
-        s"_t${math.round(threshold * 100)}_d$maxDf", Seq("labels")) { b =>
-      b.write("labels", Clusters.connectedComponents(
-        PairsArtifact.pairs(b.spark, b.dir, threshold, maxDf)
-          .select(col("da"), col("db")),
-        "da", "db"))
+  def apply(threshold: Double, maxDf: Int): Artifact =
+    new Artifact("dedupcc", "documents",
+        s"_t${math.round(threshold * 100)}_d$maxDf", Seq("labels")) {
+      protected def build(b: Artifact.Build): Unit =
+        b.write("labels", Clusters.connectedComponents(
+          PairsArtifact.pairs(b.spark, b.dir, threshold, maxDf)
+            .select(col("da"), col("db")),
+          "da", "db"))
     }
-
-  def path(dir: String, threshold: Double, maxDf: Int): String =
-    spec(threshold, maxDf).path(dir)
-
-  def materialize(spark: SparkSession, dir: String,
-                  threshold: Double, maxDf: Int): String =
-    spec(threshold, maxDf).materialize(spark, dir)
 
   /** The label table `(doc_id, cluster)`. Only docs in some near-dup
     * pair carry a label. */
   def labels(spark: SparkSession, dir: String,
              threshold: Double, maxDf: Int): DataFrame =
-    spec(threshold, maxDf).read(spark, dir, "labels")
+    apply(threshold, maxDf).read(spark, dir, "labels")
 }

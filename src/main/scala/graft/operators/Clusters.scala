@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * neighbors' labels; fixpoint = component minimum. Rounds needed =
   * graph diameter — near-dup clusters are near-cliques (diameter 1-2),
   * so a handful of rounds converges; `maxIter` bounds pathological
-  * chains.
+  * chains, and a run that reaches it without converging throws rather
+  * than return unconverged labels.
   *
   * Scale shape: each round is one job — two fused propagation hops
   * (edge-join + min-aggregate, both shuffling on node id, map-side
@@ -28,11 +29,10 @@ import org.apache.spark.sql.functions._
   */
 object Clusters {
 
-  /** Diagnostic only (read by tools.Profile and specs): rounds run and
-    * convergence status of the LAST connectedComponents call on this
-    * driver. Not part of the operator contract. */
+  /** Diagnostic only (read by tools.Profile): rounds run by the LAST
+    * connectedComponents call on this driver. Not part of the operator
+    * contract. */
   @volatile var lastRounds: Int = 0
-  @volatile var lastConverged: Boolean = true
 
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 10): DataFrame = {
@@ -145,9 +145,11 @@ object Clusters {
       iter += 1
     }
     lastRounds = iter
-    lastConverged = converged
     edges.unpersist()
     p.unpersist()
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge within maxIter=$maxIter " +
+        s"rounds ($iter rounds run)")
     labels.select(col("node").as("doc_id"), col("lbl").as("cluster"))
   }
 }

@@ -17,7 +17,8 @@ import graft.Tables
   * instead of the fact table. `q_graph_edges_build` is the registered
   * build step and carries the build cost.
   */
-object EdgeArtifact {
+object EdgeArtifact extends Artifact("cooccur", "lineitem", "",
+    Seq("edges", "freq", "meta")) {
 
   /** The edge-list plan over the (persisted) basket-array table: pairs
     * are generated IN-ROW from each order's sorted part array (i < j
@@ -49,8 +50,7 @@ object EdgeArtifact {
     * freq/meta are the marginals association metrics (lift,
     * confidence) need; storing them beside the edges makes
     * `q_market_basket` a pure artifact consumer. */
-  private val spec = Artifact("cooccur", "lineitem", "",
-      Seq("edges", "freq", "meta")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val baskets = Tables.lineitem(b.spark, b.dir)
       .groupBy(col("l_orderkey").as("okey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
@@ -70,23 +70,18 @@ object EdgeArtifact {
     } finally baskets.unpersist()
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The edge list (pa, pb, support). Consumers re-scan the parquet per
     * branch — the artifact is the dense core, orders of magnitude
     * smaller than the fact, so repeated scans beat caching it (and at
     * scale, beat re-deriving it from the fact by far more). */
   def edges(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "edges")
+    read(spark, dir, "edges")
 
   /** Per-part basket frequency (l_partkey, f). */
   def nodeFreq(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "freq")
+    read(spark, dir, "freq")
 
   /** One-row (n_orders) basket count. */
   def meta(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "meta")
+    read(spark, dir, "meta")
 }

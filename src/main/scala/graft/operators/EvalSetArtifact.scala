@@ -11,22 +11,17 @@ import graft.Tables
   * suite and shipped to every screening job, never re-shingled inside
   * each query. `q_eval_shingles_build` is the registered build step;
   * `q_contamination` and `q_corpus_prep` consume the artifact. */
-object EvalSetArtifact {
+object EvalSetArtifact extends Artifact("evalsh", "documents", "",
+    Seq("shingles")) {
 
-  private val spec = Artifact("evalsh", "documents", "",
-      Seq("shingles")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     b.write("shingles", Dedup.docShingles(
         Tables.documents(b.spark, b.dir).filter(col("source") === "src0"), 5)
       .select(col("shingle")).distinct())
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The distinct 5-gram shingle set of the held-out source (one
     * `shingle` column). Small by nature — callers broadcast it. */
   def shingles(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "shingles")
+    read(spark, dir, "shingles")
 }

@@ -22,7 +22,8 @@ import graft.Tables
   * is the production posture: blocking is the corpus-sized pass, paid
   * once; every linkage scorer downstream reads the (near-dup-sparse)
   * candidate table. */
-object HeadPairsArtifact {
+object HeadPairsArtifact extends Artifact("headpairs", "documents", "",
+    Seq("pairs")) {
 
   private def candPlan(spark: SparkSession, dir: String): DataFrame = {
     val keyed = Tables.documents(spark, dir)
@@ -43,18 +44,12 @@ object HeadPairsArtifact {
       .distinct()
   }
 
-  private val spec = Artifact("headpairs", "documents", "",
-      Seq("pairs")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     b.write("pairs", candPlan(b.spark, b.dir))
   }
-
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
 
   /** The distinct blocked candidate pairs
     * `(id_a, id_b, lang, ha, hb)` with `id_a < id_b`. */
   def pairs(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "pairs")
+    read(spark, dir, "pairs")
 }

@@ -18,10 +18,10 @@ import graft.Tables
   * written registers for its pure union/intersection algebra. The
   * artifact is ≤ sources × 256 rows — trivially broadcastable, the
   * whole point of the sketch. */
-object HllArtifact {
+object HllArtifact extends Artifact("hllregs", "documents", "_sh5",
+    Seq("regs")) {
 
-  private val spec = Artifact("hllregs", "documents", "_sh5",
-      Seq("regs")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val sh = Tables.documents(b.spark, b.dir)
       .select(col("source"),
         explode(TextAnalysis.shingles(col("text"))).as("sh"))
@@ -29,12 +29,7 @@ object HllArtifact {
       Sketches.hllRegisters(sh, col("sh"), col("source")).hint("rebalance"))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** Per-source registers `(g, idx, mr)`. */
   def registers(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "regs")
+    read(spark, dir, "regs")
 }

@@ -14,17 +14,16 @@ object IvfArtifact {
 
   /** Lloyd-refined centroids `(cell, cvec, cnrm)` and the inverted
     * list `(vec_id, cell, embedding, nrm)`. */
-  private def spec(numCentroids: Int, iterations: Int) =
-    Artifact("ivf", "embeddings", s"_c${numCentroids}_i$iterations",
-        Seq("centroids", "inverted")) { b =>
-      val (cents, inverted) = Similarity.ivfIndex(
-        Tables.embeddings(b.spark, b.dir), numCentroids, iterations)
-      b.write("centroids", cents)
-      b.write("inverted", inverted)
+  def apply(numCentroids: Int, iterations: Int): Artifact =
+    new Artifact("ivf", "embeddings", s"_c${numCentroids}_i$iterations",
+        Seq("centroids", "inverted")) {
+      protected def build(b: Artifact.Build): Unit = {
+        val (cents, inverted) = Similarity.ivfIndex(
+          Tables.embeddings(b.spark, b.dir), numCentroids, iterations)
+        b.write("centroids", cents)
+        b.write("inverted", inverted)
+      }
     }
-
-  def path(dir: String, numCentroids: Int, iterations: Int): String =
-    spec(numCentroids, iterations).path(dir)
 
   /** Corpus-sized centroid count — the standard IVF sizing rule
     * C ∝ √N (cells and per-cell list lengths grow together, so probe
@@ -51,15 +50,11 @@ object IvfArtifact {
                    iterations: Int = 2): DataFrame =
     inverted(spark, dir, autoFor(spark, dir), iterations)
 
-  def materialize(spark: SparkSession, dir: String,
-                  numCentroids: Int, iterations: Int): String =
-    spec(numCentroids, iterations).materialize(spark, dir)
-
   def centroids(spark: SparkSession, dir: String,
                 numCentroids: Int, iterations: Int): DataFrame =
-    spec(numCentroids, iterations).read(spark, dir, "centroids")
+    apply(numCentroids, iterations).read(spark, dir, "centroids")
 
   def inverted(spark: SparkSession, dir: String,
                numCentroids: Int, iterations: Int): DataFrame =
-    spec(numCentroids, iterations).read(spark, dir, "inverted")
+    apply(numCentroids, iterations).read(spark, dir, "inverted")
 }

@@ -22,15 +22,16 @@ import graft.Tables
   * trained inline, its DuckDB oracle still replays the full Lloyd
   * loop from `embeddings`, and [[StoredDerivationSpec]] pins
   * artifact-vs-direct manifest identity. */
-object IvfBaseArtifact {
+object IvfBaseArtifact extends Artifact("ivfbase", "embeddings",
+    s"_c${IvfBaseArtifact.NumCentroids}_i${IvfBaseArtifact.Iterations}" +
+    s"_n${IvfBaseArtifact.BatchN}",
+    Seq("centroids", "meta")) {
 
-  val NumCentroids = 8
-  val Iterations = 2
-  val BatchN = 8
+  final val NumCentroids = 8
+  final val Iterations = 2
+  final val BatchN = 8
 
-  private val spec = Artifact("ivfbase", "embeddings",
-      s"_c${NumCentroids}_i${Iterations}_n$BatchN",
-      Seq("centroids", "meta")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val (cents, m, nAll) = Similarity.ivfAppendBaseCentroids(
       Tables.embeddings(b.spark, b.dir), NumCentroids, Iterations, BatchN)
     b.write("centroids", cents)
@@ -38,18 +39,13 @@ object IvfBaseArtifact {
       b.spark.range(1).select(lit(m).as("m"), lit(nAll).as("n_all")))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The stored centroids `(cell, cvec, cnrm)`. */
   def centroids(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "centroids")
+    read(spark, dir, "centroids")
 
   /** `(m, n_all)`: batch boundary and total corpus size. */
   def meta(spark: SparkSession, dir: String): (Long, Long) = {
-    val r = spec.first(spark, dir, "meta")
+    val r = first(spark, dir, "meta")
     (r.getLong(0), r.getLong(1))
   }
 }

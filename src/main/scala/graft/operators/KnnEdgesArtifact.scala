@@ -11,22 +11,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * consumer needs costs only K rows per vector. Built from the IVF
   * inverted list ([[IvfArtifact]]); parameters are pinned in the path
   * so a config change can never serve a mismatched graph. */
-object KnnEdgesArtifact {
+object KnnEdgesArtifact extends Artifact("knnedges", "embeddings",
+    s"_c8_i2_k${KnnEdgesArtifact.K}", Seq("edges")) {
 
   /** Largest neighbor count any registry consumer reads. */
-  val K = 5
+  final val K = 5
 
-  private val spec = Artifact("knnedges", "embeddings", s"_c8_i2_k$K",
-      Seq("edges")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     b.write("edges",
       Similarity.inCellTopK(IvfArtifact.inverted(b.spark, b.dir, 8, 2), K))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   def edges(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "edges")
+    read(spark, dir, "edges")
 }

@@ -23,7 +23,8 @@ import graft.Tables
   * DuckDB oracles replay ([[Codecs]], [[Jpeg]],
   * [[Multimodal.wrapWithHeader]]).
   */
-object MediaArtifact {
+object MediaArtifact extends Artifact(
+    s"media_v${MediaArtifact.LayoutVersion}", "documents", "", Seq("media")) {
 
   final case class MediaRow(
       id: Long, mime: String, n_bytes: Long, media: Array[Byte], format: String)
@@ -43,7 +44,7 @@ object MediaArtifact {
     * v4: + mp3 (MPEG-1 Layer III frame stream, round 11).
     * v5: + tiff (baseline II uncompressed RGB8, round 11).
     * v6: + mpg (MPEG-1 video elementary stream, round 12). */
-  private val LayoutVersion = 6
+  private final val LayoutVersion = 6
 
   /** All 16 container synths for one batch of documents `(id, text
     * bytes)` — shared by the full build and the append path. */
@@ -78,16 +79,10 @@ object MediaArtifact {
 
   /** One pass over documents, one partitioned write. 16 container
     * synths per doc, all in-partition. */
-  private val spec = Artifact(s"media_v$LayoutVersion", "documents", "",
-      Seq("media")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val docs = docBytes(b.spark, Tables.documents(b.spark, b.dir))
     b.write("media", mediaRows(docs).toDF(), "format")
   }
-
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
 
   private def docBytes(spark: SparkSession,
       docs: DataFrame): Dataset[(Long, Array[Byte])] = {
@@ -117,7 +112,7 @@ object MediaArtifact {
 
   /** The full media table (format is the partition column). */
   def table(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "media")
+    read(spark, dir, "media")
 
   /** One format's records as the typed decode-seam input. The format
     * filter is a PARTITION filter (directory pruning, no data read

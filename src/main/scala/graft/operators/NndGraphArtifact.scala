@@ -11,15 +11,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * score visited candidates. Built at graph degree K=10 so every
   * consumer reads a rank prefix. Parameters are pinned in the path so
   * a config change can never serve a mismatched graph. */
-object NndGraphArtifact {
+object NndGraphArtifact extends Artifact("nndgraph", "embeddings",
+    s"_k${NndGraphArtifact.K}_r${NndGraphArtifact.Rounds}" +
+    s"_s${NndGraphArtifact.ScatterDegree}", Seq("edges")) {
 
   /** Graph degree (rank-prefix consumers read k' <= K). */
-  val K = 10
-  val Rounds = 3
-  val ScatterDegree = 10
+  final val K = 10
+  final val Rounds = 3
+  final val ScatterDegree = 10
 
-  private val spec = Artifact("nndgraph", "embeddings",
-      s"_k${K}_r${Rounds}_s$ScatterDegree", Seq("edges")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     // the parquet write IS the descent's finalizing action — one
     // materializing pass over the round cascade, not a count + a
     // write (see the nnDescent finalize overload)
@@ -31,11 +32,6 @@ object NndGraphArtifact {
       finalize = b.write("edges", _))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   def edges(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "edges")
+    read(spark, dir, "edges")
 }

@@ -26,20 +26,15 @@ import graft.Tables
   * cheap filter of the corpus, not a training pass. */
 object PqCodebookArtifact {
 
-  private def spec(iterations: Int) =
-    Artifact("pqcb", "embeddings", s"_i$iterations", Seq("codebook")) { b =>
-      b.write("codebook", Similarity.pqCodebookRefined(
-        Tables.embeddings(b.spark, b.dir), iterations))
+  def apply(iterations: Int): Artifact =
+    new Artifact("pqcb", "embeddings", s"_i$iterations", Seq("codebook")) {
+      protected def build(b: Artifact.Build): Unit =
+        b.write("codebook", Similarity.pqCodebookRefined(
+          Tables.embeddings(b.spark, b.dir), iterations))
     }
-
-  def path(dir: String, iterations: Int): String = spec(iterations).path(dir)
-
-  def materialize(spark: SparkSession, dir: String,
-                  iterations: Int): String =
-    spec(iterations).materialize(spark, dir)
 
   /** The refined codebook `(sub, cidx, cvec)`. */
   def codebook(spark: SparkSession, dir: String,
                iterations: Int): DataFrame =
-    spec(iterations).read(spark, dir, "codebook")
+    apply(iterations).read(spark, dir, "codebook")
 }

@@ -28,36 +28,39 @@ import graft.Tables
   * exactly the production posture: the duel matrix is
   * vocabulary-sized (items²), the one corpus pass that builds it is
   * paid once, and every audit query downstream is matrix-sized. */
-object PrefDuelArtifact {
+object PrefDuelArtifact extends Artifact("prefduel", "events", "",
+    Seq("wins", "fit")) {
 
   val Iters = 2
 
-  /** Engine-side duel derivation shared by the preference queries:
-    * each user's consecutive event pairs (by event_id) with differing
-    * types compete, the higher `value` wins (ties to the smaller
-    * type). One partitioned lead window — never a global sort. */
-  private def duelWins(spark: SparkSession, dir: String): DataFrame = {
+  /** The preference-duel rule, decided here for every consumer: each
+    * user's consecutive events (by event_id) with differing types
+    * compete; the higher `value` wins, a tie goes to the smaller type.
+    * One row per duel: `(user_id, event_id, winner, loser)`, then for
+    * each `(column, next)` in `carry` the first event's `column` and
+    * the second event's under the name `next`. One partitioned lead
+    * window — never a global sort. */
+  def duels(events: DataFrame, carry: (String, String)*): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
-    val seq0 = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("value"))
-      .withColumn("nt", lead(col("event_type"), 1).over(w))
-      .withColumn("nv", lead(col("value"), 1).over(w))
-      .filter(col("nt").isNotNull && col("nt") =!= col("event_type"))
+    val leads = (Seq("event_type" -> "nt", "value" -> "nv") ++ carry).map {
+      case (c, next) => lead(col(c), 1).over(w).as(next)
+    }
     val firstWins = col("value") > col("nv") ||
       (col("value") === col("nv") && col("event_type") < col("nt"))
-    seq0
-      .select(when(firstWins, col("event_type")).otherwise(col("nt"))
-        .as("winner"),
-        when(firstWins, col("nt")).otherwise(col("event_type"))
-          .as("loser"))
-      .groupBy(col("winner"), col("loser"))
-      .agg(count(lit(1)).as("n"))
+    events
+      .select((Seq("user_id", "event_id", "event_type", "value") ++
+        carry.map(_._1)).map(col) ++ leads: _*)
+      .filter(col("nt").isNotNull && col("nt") =!= col("event_type"))
+      .select(Seq(col("user_id"), col("event_id"),
+        when(firstWins, col("event_type")).otherwise(col("nt")).as("winner"),
+        when(firstWins, col("nt")).otherwise(col("event_type")).as("loser")) ++
+        carry.flatMap { case (c, next) => Seq(col(c), col(next)) }: _*)
   }
 
-  private val spec = Artifact("prefduel", "events", "",
-      Seq("wins", "fit")) { b =>
-    val wins = duelWins(b.spark, b.dir)
+  protected def build(b: Artifact.Build): Unit = {
+    val wins = duels(Tables.events(b.spark, b.dir))
+      .groupBy(col("winner"), col("loser"))
+      .agg(count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       b.write("wins", wins)
@@ -67,17 +70,12 @@ object PrefDuelArtifact {
     } finally wins.unpersist()
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The duel win matrix `(winner, loser, n)`. */
   def wins(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "wins")
+    read(spark, dir, "wins")
 
   /** The 2-round Bradley-Terry fit
     * `(item, n_wins, n_games, strength_ppm)`. */
   def fit(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "fit")
+    read(spark, dir, "fit")
 }

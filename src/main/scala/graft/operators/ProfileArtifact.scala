@@ -27,7 +27,8 @@ import graft.Tables
   * the profile is users-sized, the corpus passes that build it are
   * paid once, and every release-audit query downstream is
   * group-histogram-sized. */
-object ProfileArtifact {
+object ProfileArtifact extends Artifact("profile", "events", "",
+    Seq("profile")) {
 
   /** Engine-side profile derivation (moved verbatim from
     * `PrivacyQueries.profile`): per (user, type, day) counts+cents,
@@ -58,17 +59,11 @@ object ProfileArtifact {
           " cast(9 as bigint))").as("sbkt"))
   }
 
-  private val spec = Artifact("profile", "events", "",
-      Seq("profile")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     b.write("profile", derive(b.spark, b.dir))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The per-user profile `(user_id, dom_type, ebkt, dbkt, sbkt)`. */
   def profile(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "profile")
+    read(spark, dir, "profile")
 }

@@ -18,49 +18,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * full-scoring cost to label-table joins. Keyed like
   * [[TeacherArtifact]], plus the fixed task parameters.
   */
-object NbScoresArtifact {
+object NbScoresArtifact extends Artifact("nbscores", "documents",
+    s"_bp${TeacherArtifact.trainCutBp}_v256", Seq("scores")) {
 
   /** Every held-out doc scored against every class under the NB model
     * trained on the teacher artifact's train slice:
     * `(doc_id, actual, label, score)` — exact BIGINT nano
     * log-likelihoods. */
-  private val spec = Artifact("nbscores", "documents",
-      s"_bp${TeacherArtifact.trainCutBp}_v256", Seq("scores")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     b.write("scores", Classify.nbHeldOutScoresFrom(
         TeacherArtifact.labeled(b.spark, b.dir),
         TeacherArtifact.toks(b.spark, b.dir))
       .hint("rebalance"))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** Per-(held-out doc, class) NB scores. */
   def scores(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "scores")
+    read(spark, dir, "scores")
 }
 
 /** Rocchio student predictions `(doc_id, actual, predicted)` on the
   * held-out slice, fallback class already applied — see
   * [[NbScoresArtifact]] for the tier's contract. */
-object RocchioPredsArtifact {
+object RocchioPredsArtifact extends Artifact("rcpreds", "documents",
+    s"_bp${TeacherArtifact.trainCutBp}_v256", Seq("preds")) {
 
-  private val spec = Artifact("rcpreds", "documents",
-      s"_bp${TeacherArtifact.trainCutBp}_v256", Seq("preds")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     b.write("preds", Classify.rocchioHeldOutFrom(
         TeacherArtifact.labeled(b.spark, b.dir),
         TeacherArtifact.toks(b.spark, b.dir), maxVocab = 256)
       .hint("rebalance"))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** Per-held-out-doc Rocchio predictions. */
   def preds(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "preds")
+    read(spark, dir, "preds")
 }

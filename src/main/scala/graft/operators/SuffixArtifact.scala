@@ -24,14 +24,10 @@ object SuffixArtifact {
     * and caps reported matches at 128 chars (a match that long is a
     * duplicated document prefix, which is what the trim/drop decision
     * needs; the window widens by adding rounds, one per doubling). */
-  val MaxLen = 128
+  final val MaxLen = 128
 
   /** log2(MaxLen). */
   val Rounds: Int = Integer.numberOfTrailingZeros(MaxLen)
-
-  /** Build = the strided build (one artifact serves both families). */
-  def materialize(spark: SparkSession, dir: String): String =
-    StridedSuffixArtifact.materialize(spark, dir)
 
   /** The final plain level — the plain suffix array itself, with exact
     * dense ranks (equal to what the standalone plain doubling build
@@ -39,7 +35,7 @@ object SuffixArtifact {
     * still matches hash-for-hash), read from the stored `plain_dense`
     * part. */
   def last(spark: SparkSession, dir: String): DataFrame =
-    StridedSuffixArtifact.spec.read(spark, dir, "plain_dense")
+    StridedSuffixArtifact.read(spark, dir, "plain_dense")
 }
 
 /** Strided suffix-array artifact — the FINAL rank level over
@@ -53,10 +49,15 @@ object SuffixArtifact {
   * the in-row LCP ([[SuffixArray.commonPrefixLen]]) removed every
   * consumer of the intermediate levels, which cuts 7 of the 8 level
   * parquet writes from the build. */
-object StridedSuffixArtifact {
+object StridedSuffixArtifact extends Artifact("suffixstrided", "documents",
+    // BlockBase is part of the key: stored bids are base-dependent, so
+    // a base change must never serve a stale table
+    s"_w${StridedSuffixArtifact.Window}_s${StridedSuffixArtifact.Stride}" +
+    s"_b${SuffixArray.BlockBase}",
+    Seq(s"level_${SuffixArtifact.Rounds}", "plain_dense")) {
 
-  val Window: Int = SuffixArtifact.MaxLen
-  val Stride: Int = Window / 2
+  final val Window = SuffixArtifact.MaxLen
+  final val Stride = Window / 2
   val Rounds: Int = SuffixArtifact.Rounds
 
   /** The overlapping-block view of the corpus this artifact ranks —
@@ -65,11 +66,7 @@ object StridedSuffixArtifact {
   def blockText(spark: SparkSession, dir: String): DataFrame =
     SuffixArray.blocks(graft.Tables.documents(spark, dir), Window, Stride)
 
-  // BlockBase is part of the key: stored bids are base-dependent, so
-  // a base change must never serve a stale table
-  private[operators] val spec = Artifact("suffixstrided", "documents",
-      s"_w${Window}_s${Stride}_b${SuffixArray.BlockBase}",
-      Seq(s"level_$Rounds", "plain_dense")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     // round 13: the final level comes from ONE direct suffix-text
     // sort ([[SuffixArray.finalLevel]] — rank-identical to the
     // doubling, which remains as the differential-test reference)
@@ -89,14 +86,9 @@ object StridedSuffixArtifact {
     b.write("plain_dense", SuffixArray.denseRerank(plain))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The stored final level, block-coordinate keyed. */
   def last(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, s"level_$Rounds")
+    read(spark, dir, s"level_$Rounds")
 }
 
 /** Materialized STRIDED repeat-pair table — the rank-adjacency LCP
@@ -107,25 +99,20 @@ object StridedSuffixArtifact {
   * step, `q_dedup_exact_cross`/`q_dedup_exact_apply`/`q_corpus_clean`
   * read the stored pairs. The two-deep artifact convention of the
   * IVF → kNN-edges → NN-descent chain applied to the suffix family. */
-object StridedLrsPairsArtifact {
+object StridedLrsPairsArtifact extends Artifact("suffixpairs", "documents",
+    s"_w${StridedSuffixArtifact.Window}_s${StridedSuffixArtifact.Stride}" +
+    s"_b${SuffixArray.BlockBase}", Seq("pairs")) {
 
-  private val spec = Artifact("suffixpairs", "documents",
-      s"_w${StridedSuffixArtifact.Window}_s${StridedSuffixArtifact.Stride}" +
-        s"_b${SuffixArray.BlockBase}", Seq("pairs")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     b.write("pairs", SuffixArray.longestRepeatedStrided(
       StridedSuffixArtifact.last(b.spark, b.dir),
       StridedSuffixArtifact.blockText(b.spark, b.dir),
       StridedSuffixArtifact.Window, StridedSuffixArtifact.Stride))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The stored pair table. */
   def pairs(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "pairs")
+    read(spark, dir, "pairs")
 }
 
 /** Materialized PLAIN repeat-pair table — [[SuffixArray.longestRepeated]]
@@ -134,21 +121,16 @@ object StridedLrsPairsArtifact {
   * per execution (~13 s/rep at sf0.1); as with the strided family, the
   * pass is paid once by the registered build step and the query reads
   * the pair table. */
-object PlainLrsPairsArtifact {
+object PlainLrsPairsArtifact extends Artifact("suffixplainpairs", "documents",
+    s"_w${SuffixArtifact.MaxLen}", Seq("pairs")) {
 
-  private val spec = Artifact("suffixplainpairs", "documents",
-      s"_w${SuffixArtifact.MaxLen}", Seq("pairs")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     b.write("pairs", SuffixArray.longestRepeated(
       graft.Tables.documents(b.spark, b.dir),
       SuffixArtifact.last(b.spark, b.dir), SuffixArtifact.MaxLen))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** The stored pair table. */
   def pairs(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "pairs")
+    read(spark, dir, "pairs")
 }

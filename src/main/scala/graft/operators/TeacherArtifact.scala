@@ -21,17 +21,17 @@ import graft.Tables
   * corpus scan + explode + token aggregate + parquet writes), and the
   * other two students consume the written tables.
   */
-object TeacherArtifact {
+object TeacherArtifact extends Artifact("teacher", "documents",
+    s"_profile_bp${TeacherArtifact.trainCutBp}", Seq("labeled", "toks")) {
 
   /** The registry's fixed teacher task: profile labeler, 80/20 split. */
-  val trainCutBp = 8000
+  final val trainCutBp = 8000
 
   /** Two parquet outputs share ONE persisted labeled-corpus scan:
     *  - labeled: (doc_id, actual, is_train)            — one row per doc
     *  - toks:    (doc_id, actual, is_train, token, tcnt) — per-doc counts
     */
-  private val spec = Artifact("teacher", "documents",
-      s"_profile_bp$trainCutBp", Seq("labeled", "toks")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val labeled = Tables.documents(b.spark, b.dir)
       .select(col("doc_id"),
         TextAnalysis.predictedProfile(col("text")).as("actual"),
@@ -46,16 +46,11 @@ object TeacherArtifact {
     } finally labeled.unpersist()
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** Per-doc teacher labels `(doc_id, actual, is_train)`. */
   def labeled(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "labeled")
+    read(spark, dir, "labeled")
 
   /** Per-doc token counts `(doc_id, actual, is_train, token, tcnt)`. */
   def toks(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "toks")
+    read(spark, dir, "toks")
 }

@@ -20,14 +20,14 @@ import graft.Tables
   * under the standard `df·10 ≤ n_docs` stop-term cut, so everything
   * downstream of the index is integer arithmetic.
   */
-object TermIndexArtifact {
+object TermIndexArtifact extends Artifact("termidx", "documents", "_cap10",
+    Seq("kept", "norms")) {
 
   /** Two parquet outputs share one persisted posting build:
     *  - kept:  (doc_id, term, w)  — df-capped integer tf-idf postings
     *  - norms: (doc_id, nrm)      — per-doc Σw² (BIGINT)
     */
-  private val spec = Artifact("termidx", "documents", "_cap10",
-      Seq("kept", "norms")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val docs = Tables.documents(b.spark, b.dir)
     val tf = docs
       .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("term"))
@@ -46,16 +46,11 @@ object TermIndexArtifact {
     } finally kept.unpersist()
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** Df-capped postings `(doc_id, term, w)`. */
   def kept(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "kept")
+    read(spark, dir, "kept")
 
   /** Per-doc squared norms `(doc_id, nrm)`. */
   def norms(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "norms")
+    read(spark, dir, "norms")
 }

@@ -24,7 +24,8 @@ import graft.Tables
   * whitespace tokenization, the label columns simply pruned at the
   * parquet scan).
   */
-object TopicArtifact {
+object TopicArtifact extends Artifact("topics", "documents", "",
+    Seq("assign", "cent")) {
 
   /** Per-doc full-vocabulary tf vectors `(doc_id, term, w)` — read
     * from the materialized tokenized corpus, never re-exploded. */
@@ -42,8 +43,7 @@ object TopicArtifact {
     *  - cent:   (topic, pos, term, c)   — 256-bounded centroid,
     *                                      pos = rank by (c DESC, term)
     */
-  private val spec = Artifact("topics", "documents", "",
-      Seq("assign", "cent")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val docs = Tables.documents(b.spark, b.dir)
     val kept = tf(b.spark, b.dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -111,19 +111,14 @@ object TopicArtifact {
     } finally kept.unpersist()
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** Final topic assignment `(doc_id, topic)` — every doc with at
     * least one token carries a label; the topic id is its seed doc's
     * id (label-by-representative, like connected components). */
   def assign(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "assign")
+    read(spark, dir, "assign")
 
   /** Bounded centroids `(topic, pos, term, c)`, pos = 0-based rank by
     * (c DESC, term ASC) within the topic. */
   def centroids(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "cent")
+    read(spark, dir, "cent")
 }

@@ -39,7 +39,9 @@ import org.apache.spark.sql.functions._
   * `UnigramVocabSpec` sequential replay both pin. Words longer than
   * [[MaxLen]] fall outside the tokenizer domain and take the
   * documented one-char-per-piece fallback in the fertility consumer. */
-object UnigramVocabArtifact {
+object UnigramVocabArtifact extends Artifact("unigramvocab", "documents",
+    s"_l${UnigramVocabArtifact.MaxLen}p${UnigramVocabArtifact.PieceMax}",
+    Seq("vocab", "reprs")) {
 
   // round 13: build-time (batch-only) lineage cut — eager
   // localCheckpoint keeps internal rows; Frames.snapshot's
@@ -50,10 +52,10 @@ object UnigramVocabArtifact {
 
   /** DP bound — the longest word the tokenizer segments (corpus max
     * is 8; see the fallback note above). */
-  val MaxLen = 10
+  final val MaxLen = 10
 
   /** Longest candidate piece. */
-  val PieceMax = 5
+  final val PieceMax = 5
 
   /** Cost base: `cost = pieces·B − Σscore`, lexicographic while every
     * piece score < B. */
@@ -113,8 +115,7 @@ object UnigramVocabArtifact {
     (seg, usage)
   }
 
-  private val spec = Artifact("unigramvocab", "documents",
-      s"_l${MaxLen}p$PieceMax", Seq("vocab", "reprs")) { b =>
+  protected def build(b: Artifact.Build): Unit = {
     val words = graft.Tables.documents(b.spark, b.dir)
       .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0 && length(col("w")) <= MaxLen)
@@ -147,18 +148,13 @@ object UnigramVocabArtifact {
       segs2.select(col("w"), col("f"), col("n_pieces"), col("repr")))
   }
 
-  def path(dir: String): String = spec.path(dir)
-
-  def materialize(spark: SparkSession, dir: String): String =
-    spec.materialize(spark, dir)
-
   /** Final learned vocabulary `(piece, piece_len, c)` — pieces
     * actually used by the pass-2 segmentation, scored by usage. */
   def vocab(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "vocab")
+    read(spark, dir, "vocab")
 
   /** Every in-domain word's decomposition `(w, f, n_pieces, repr)`
     * under the learned vocabulary. */
   def reprs(spark: SparkSession, dir: String): DataFrame =
-    spec.read(spark, dir, "reprs")
+    read(spark, dir, "reprs")
 }

@@ -91,7 +91,7 @@ object DedupQueries {
       // The registered build step of the near-dup pair artifact
       // (operators/ClusterArtifact.scala, PairsArtifact): the dedup
       // pipeline's first job, whose output the CC labeling consumes.
-      graft.operators.PairsArtifact.materialize(spark, dir, 0.5, JaccardCap)
+      graft.operators.PairsArtifact(0.5, JaccardCap).materialize(spark, dir)
       graft.operators.PairsArtifact.pairs(spark, dir, 0.5, JaccardCap)
         .orderBy(col("da"), col("db"))
     },
@@ -358,7 +358,7 @@ object DedupQueries {
       // (operators/ClusterArtifact.scala): pairs → CC run once,
       // written, and consumed by q_dedup_keep /
       // q_dedup_cluster_sizes as a label join.
-      graft.operators.ClusterArtifact.materialize(spark, dir, 0.5, JaccardCap)
+      graft.operators.ClusterArtifact(0.5, JaccardCap).materialize(spark, dir)
       graft.operators.ClusterArtifact.labels(spark, dir, 0.5, JaccardCap)
         .orderBy(col("doc_id"))
     },

@@ -1136,28 +1136,18 @@ object SignalQueries {
     """.trim))
 
   /** Annotator-cohort ratings shared by the agreement queries: the
-    * same per-user duel window, with annotator = `user_id % 3` (three
-    * rating cohorts) and the item = the unordered type pair. Each
+    * duels of [[graft.operators.PrefDuelArtifact.duels]], with
+    * annotator = `user_id % 3` (three rating cohorts) and the item =
+    * the unordered type pair. Each
     * cohort's rating for an item is its MAJORITY duel direction
     * (0 = the lower type wins; ties to 0, the lexicographically
     * smaller winner — same convention as the duel derivation). One
     * corpus pass; the ratings table is cohorts × type-pairs. */
   private def annotatorRatings(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
-    val seq0 = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("value"))
-      .withColumn("nt", lead(col("event_type"), 1).over(w))
-      .withColumn("nv", lead(col("value"), 1).over(w))
-      .filter(col("nt").isNotNull && col("nt") =!= col("event_type"))
-    val firstWins = col("value") > col("nv") ||
-      (col("value") === col("nv") && col("event_type") < col("nt"))
-    val duels = seq0.select(
-      pmod(col("user_id"), lit(3)).cast("int").as("annot"),
-      when(firstWins, col("event_type")).otherwise(col("nt")).as("winner"),
-      when(firstWins, col("nt")).otherwise(col("event_type")).as("loser"))
+    val duels = graft.operators.PrefDuelArtifact.duels(Tables.events(spark, dir))
+      .select(pmod(col("user_id"), lit(3)).cast("int").as("annot"),
+        col("winner"), col("loser"))
     val oriented = duels.select(col("annot"),
         when(col("winner") < col("loser"), col("winner"))
           .otherwise(col("loser")).as("i"),
@@ -1307,22 +1297,11 @@ object SignalQueries {
     "q_pref_pairs_export",
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
-      val seq2 = Tables.events(spark, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .withColumn("nt", lead(col("event_type"), 1).over(w))
-        .withColumn("nv", lead(col("value"), 1).over(w))
-        .withColumn("k2", lead(col("k"), 1).over(w))
-        .filter(col("nt").isNotNull && col("nt") =!= col("event_type"))
-      val firstWins = col("value") > col("nv") ||
-        (col("value") === col("nv") && col("event_type") < col("nt"))
-      val inst = seq2.select(col("user_id"), col("event_id"), col("k"),
-        col("k2"),
-        when(firstWins, col("event_type")).otherwise(col("nt")).as("chosen"),
-        when(firstWins, col("nt")).otherwise(col("event_type"))
-          .as("rejected"))
+      val inst = graft.operators.PrefDuelArtifact.duels(Tables.events(spark, dir)
+          .withColumn("k", get_json_object(col("props"), "$.k").cast("long")),
+          "k" -> "k2")
+        .select(col("user_id"), col("event_id"), col("k"), col("k2"),
+          col("winner").as("chosen"), col("loser").as("rejected"))
       val train = inst.filter(pmod(col("user_id"), lit(10)) =!= 0)
       val evalCtx = inst.filter(pmod(col("user_id"), lit(10)) === 0)
         .select(col("k"), col("k2")).distinct()

@@ -127,8 +127,8 @@ object SimilarityQueries {
       // off the materialized inverted list. Search queries
       // (q_embed_ivf_multiprobe) consume the index instead of
       // rebuilding it — offline build, online search.
-      graft.operators.IvfArtifact.materialize(spark, dir,
-        numCentroids = 8, iterations = 2)
+      graft.operators.IvfArtifact(numCentroids = 8, iterations = 2)
+        .materialize(spark, dir)
       graft.operators.IvfArtifact.inverted(spark, dir, 8, 2)
         .groupBy(col("cell")).agg(count(lit(1)).as("n_vectors"))
         .orderBy(col("cell"))

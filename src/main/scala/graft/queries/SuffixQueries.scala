@@ -71,7 +71,7 @@ object SuffixQueries {
     "q_suffix_array",
     (spark, dir) => {
       val docs = Tables.documents(spark, dir)
-      graft.operators.SuffixArtifact.materialize(spark, dir)
+      graft.operators.StridedSuffixArtifact.materialize(spark, dir)
       graft.operators.SuffixArtifact.last(spark, dir)
         .orderBy(col("rank"), col("doc_id"), col("pos"))
         .limit(100)

@@ -22,7 +22,7 @@ import graft.operators.{Artifacts, Clusters}
   * once warm, unmeasured, then `N` timed reps (default 1). During a rep
   * one SparkListener prints a `[job]` line per Spark job and a `[stage]`
   * line per completed stage; the rep ends with `[total]`, and with
-  * `[cc] rounds= converged=` when it ran connected components.
+  * `[cc] rounds=` when it ran connected components.
   *  - `--cold` wipes every artifact and skips the warm run, so the first
   *    rep of a query that reads an artifact profiles that artifact's
   *    build.
@@ -84,8 +84,8 @@ object Profile {
           val sec = (System.nanoTime() - t0) / 1e9
           listener.drain(sc)
           out(f"[total] ${q.name} rep $rep $sec%.3f s")
-          if (Clusters.lastRounds > 0) out(s"[cc] ${q.name} " +
-            s"rounds=${Clusters.lastRounds} converged=${Clusters.lastConverged}")
+          if (Clusters.lastRounds > 0)
+            out(s"[cc] ${q.name} rounds=${Clusters.lastRounds}")
         }
         if (plan) {
           out(s"========== ${q.name} ==========")

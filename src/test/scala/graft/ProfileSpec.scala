@@ -30,8 +30,8 @@ class ProfileSpec extends AnyFunSuite {
     // call site of the thread AQE submits them from
     assert(!out.exists(l => l.startsWith("[job]") && l.contains("withThreadLocalCaptured")),
       out.mkString("\n"))
-    val cc = out.filter(_.startsWith(s"[cc] $query rounds="))
-    assert(cc.size == 2 && cc.forall(_.endsWith("converged=true")), out.mkString("\n"))
+    val cc = out.filter(_.matches(s"\\[cc\\] $query rounds=[1-9][0-9]*"))
+    assert(cc.size == 2, out.mkString("\n"))
     assert(!out.exists(_.startsWith("[failed]")))
   }
 

@@ -20,6 +20,11 @@ class SessionsSpec extends AnyFunSuite {
     }
   }
 
+  test("the RocksDB state store writes changelog checkpoints, as perfbench's session does") {
+    val key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    assert(TestSpark.spark.conf.get(key) == "true", "a base setting of Sessions.builder")
+  }
+
   test("Tables.load leaves the session's nanos-as-long setting as it is") {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     assert(TestSpark.spark.conf.get(key) == "true", "a base setting of Sessions.builder")

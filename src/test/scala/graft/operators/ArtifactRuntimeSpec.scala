@@ -46,10 +46,12 @@ class ArtifactRuntimeSpec extends AnyFunSuite {
   test("concurrent reads of one spec build it once") {
     val dir = tmp("artconc")
     val builds = new AtomicInteger()
-    val spec = Artifact("conc", "t", "", Seq("p")) { b =>
-      builds.incrementAndGet()
-      Thread.sleep(300) // keep the build open while the others arrive
-      b.write("p", b.spark.range(5).toDF("id"))
+    val spec = new Artifact("conc", "t", "", Seq("p")) {
+      protected def build(b: Artifact.Build): Unit = {
+        builds.incrementAndGet()
+        Thread.sleep(300) // keep the build open while the others arrive
+        b.write("p", b.spark.range(5).toDF("id"))
+      }
     }
     val start = new java.util.concurrent.CountDownLatch(1)
     val sums = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -71,10 +73,12 @@ class ArtifactRuntimeSpec extends AnyFunSuite {
   test("a build that throws rethrows, stays incomplete, and is retried") {
     val dir = tmp("artfail")
     val builds = new AtomicInteger()
-    val spec = Artifact("fail", "t", "", Seq("p", "q")) { b =>
-      b.write("p", b.spark.range(3).toDF("id"))
-      if (builds.incrementAndGet() == 1) sys.error("boom")
-      b.write("q", b.spark.range(2).toDF("id"))
+    val spec = new Artifact("fail", "t", "", Seq("p", "q")) {
+      protected def build(b: Artifact.Build): Unit = {
+        b.write("p", b.spark.range(3).toDF("id"))
+        if (builds.incrementAndGet() == 1) sys.error("boom")
+        b.write("q", b.spark.range(2).toDF("id"))
+      }
     }
     val root = spec.path(dir)
     try {

@@ -55,6 +55,41 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(a == Artifacts.path("/root/testdata/sf0.001", "lineitem", "cooccur"))
   }
 
+  test("every artifact root is its source table's path plus its pinned key") {
+    val roots = Seq(
+      (AppendGraphArtifact.path(dir), "embeddings", "nndappend", "_b4_h3_l1_n8"),
+      (BeamWalkArtifact.path(dir), "embeddings", "beamwalk", "_q8_16_b4_h4_e0"),
+      (BpeVocabArtifact.path(dir), "documents", "bpevocab", "_r8"),
+      (ClusterArtifact(0.5, 2).path(dir), "documents", "dedupcc", "_t50_d2"),
+      (EdgeArtifact.path(dir), "lineitem", "cooccur", ""),
+      (EvalSetArtifact.path(dir), "documents", "evalsh", ""),
+      (HeadPairsArtifact.path(dir), "documents", "headpairs", ""),
+      (HllArtifact.path(dir), "documents", "hllregs", "_sh5"),
+      (IvfArtifact(8, 2).path(dir), "embeddings", "ivf", "_c8_i2"),
+      (IvfBaseArtifact.path(dir), "embeddings", "ivfbase", "_c8_i2_n8"),
+      (KnnEdgesArtifact.path(dir), "embeddings", "knnedges", "_c8_i2_k5"),
+      (MediaArtifact.path(dir), "documents", "media_v6", ""),
+      (NbScoresArtifact.path(dir), "documents", "nbscores", "_bp8000_v256"),
+      (NndGraphArtifact.path(dir), "embeddings", "nndgraph", "_k10_r3_s10"),
+      (PairsArtifact(0.5, 2).path(dir), "documents", "ndpairs", "_t50_d2"),
+      (PlainLrsPairsArtifact.path(dir), "documents", "suffixplainpairs", "_w128"),
+      (PqCodebookArtifact(2).path(dir), "embeddings", "pqcb", "_i2"),
+      (PrefDuelArtifact.path(dir), "events", "prefduel", ""),
+      (ProfileArtifact.path(dir), "events", "profile", ""),
+      (RocchioPredsArtifact.path(dir), "documents", "rcpreds", "_bp8000_v256"),
+      (StridedLrsPairsArtifact.path(dir), "documents", "suffixpairs",
+        "_w128_s64_b1048576"),
+      (StridedSuffixArtifact.path(dir), "documents", "suffixstrided",
+        "_w128_s64_b1048576"),
+      (TeacherArtifact.path(dir), "documents", "teacher", "_profile_bp8000"),
+      (TermIndexArtifact.path(dir), "documents", "termidx", "_cap10"),
+      (TopicArtifact.path(dir), "documents", "topics", ""),
+      (UnigramVocabArtifact.path(dir), "documents", "unigramvocab", "_l10p5"))
+    roots.foreach { case (root, table, tag, key) =>
+      assert(root == Artifacts.path(dir, table, tag) + key, tag)
+    }
+  }
+
   test("indexed IVF search equals the monolithic search") {
     val emb = graft.Tables.embeddings(spark, dir)
     val monolithic = Similarity.ivfSearch(emb, numCentroids = 8,

@@ -85,7 +85,7 @@ class IvfRecallSpec extends AnyFunSuite {
 
   test("IVF-PQ: k results per query; best ADC is monotone in probes") {
     val emb = graft.Tables.embeddings(spark, dir)
-    IvfArtifact.materialize(spark, dir, numCentroids = 8, iterations = 2)
+    IvfArtifact(numCentroids = 8, iterations = 2).materialize(spark, dir)
     val cents = IvfArtifact.centroids(spark, dir, 8, 2)
     val inv = IvfArtifact.inverted(spark, dir, 8, 2)
     def bestAdc(probes: Int): Map[Long, Long] =

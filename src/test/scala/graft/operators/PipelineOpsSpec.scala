@@ -81,6 +81,15 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(got.size == 13 && got.values.forall(_ == 0L))
   }
 
+  test("connected components throw, not mislabel, when maxIter is too few") {
+    // a 60-node path needs 59 hops; the default 10 rounds run 21
+    val pairs = (0L until 59L).map(i => (i, i + 1)).toDF("da", "db")
+    val e = intercept[IllegalStateException](
+      Clusters.connectedComponents(pairs, "da", "db"))
+    assert(e.getMessage.contains("maxIter=10") &&
+      e.getMessage.contains("10 rounds run"), e.getMessage)
+  }
+
   test("lateAudit two-level prefix scan equals the sequential watermark replay") {
     // jittered arrivals: event times mostly increase with arr but with
     // planted out-of-order stragglers; tiny bucket size (4) forces the
