@@ -10,10 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet are then free via Catalyst).
   */
 object Tables {
-  val All: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   // Memoized RESOLVED relation per (session, parquet path), for the
   // tables here and every artifact part (`Artifacts.read`) — round 13.
   // `spark.read.parquet` re-lists the directory and re-reads the

@@ -3,17 +3,11 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.SparkSessionExtensions
 
-/** SQL surface for the engine's native expressions.
-  *
-  * Two registration paths:
-  *  - `GraftFunctions.register(spark)` on a live session;
-  *  - `spark.sql.extensions=graft.functions.GraftExtensions` at
-  *    session build time (the standard extensions hook).
-  */
+/** SQL surface for the engine's native expressions: register them on
+  * a live session with `GraftFunctions.register(spark)`. */
 object GraftFunctions {
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(
       (
         FunctionIdentifier("float_dot"),
@@ -56,11 +50,4 @@ object GraftFunctions {
     functions.foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
     }
-}
-
-/** `SparkSessionExtensions` hook: inject the engine's functions at
-  * session construction (config `spark.sql.extensions`). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(extensions: SparkSessionExtensions): Unit =
-    GraftFunctions.functions.foreach(extensions.injectFunction)
 }

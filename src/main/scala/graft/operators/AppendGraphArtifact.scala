@@ -34,8 +34,7 @@ import org.apache.spark.sql.functions._
   * Parameters are pinned in the path. */
 object AppendGraphArtifact extends Artifact("nndappend", "embeddings",
     s"_b${AppendGraphArtifact.Beam}_h${AppendGraphArtifact.Hops}" +
-    s"_l${AppendGraphArtifact.LocalRounds}_n${AppendGraphArtifact.BatchN}",
-    Seq("edges", "meta")) {
+    s"_l${AppendGraphArtifact.LocalRounds}_n${AppendGraphArtifact.BatchN}") {
 
   final val Beam = 4
   final val Hops = 3

@@ -28,8 +28,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * skip-if-complete, and the first reader builds. A build may read
   * other artifacts (the chained IVF → kNN-edges → NN-descent tiers);
   * roots form a DAG, so the per-root locks cannot deadlock. */
-abstract class Artifact(tag: String, sourceTable: String, keySuffix: String,
-    parts: Seq[String]) {
+abstract class Artifact(tag: String, sourceTable: String, keySuffix: String) {
 
   protected def build(b: Artifact.Build): Unit
 

@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions._
   * executed once, audits read the trace. */
 object BeamWalkArtifact extends Artifact("beamwalk", "embeddings",
     s"_q${BeamWalkArtifact.QMin}_${BeamWalkArtifact.QMax}" +
-    s"_b${BeamWalkArtifact.Beam}_h${BeamWalkArtifact.Hops}_e${BeamWalkArtifact.Entry}",
-    Seq("seen", "cost")) {
+    s"_b${BeamWalkArtifact.Beam}_h${BeamWalkArtifact.Hops}_e${BeamWalkArtifact.Entry}") {
 
   final val QMin = 8L
   final val QMax = 16L

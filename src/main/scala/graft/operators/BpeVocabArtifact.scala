@@ -22,14 +22,7 @@ import org.apache.spark.sql.functions._
   * round released) so the plan stays shallow at any round count.
   * The round count is pinned in the path. */
 object BpeVocabArtifact extends Artifact("bpevocab", "documents",
-    s"_r${BpeVocabArtifact.Rounds}", Seq("merges", "reprs")) {
-
-  // round 13: build-time (batch-only) lineage cut — eager
-  // localCheckpoint keeps internal rows; Frames.snapshot's
-  // external-Row form is only needed under streaming
-  // foreachBatch re-analysis.
-  private def snap(df: org.apache.spark.sql.DataFrame) =
-    df.localCheckpoint(true)
+    s"_r${BpeVocabArtifact.Rounds}") {
 
   /** Merge rounds — the learned-vocabulary size knob. */
   final val Rounds = 8
@@ -48,22 +41,24 @@ object BpeVocabArtifact extends Artifact("bpevocab", "documents",
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
     // " f  a  s  t " — single-space pad, double-space between symbols
-    var repr = snap(words.select(col("w"),
+    var repr = words.select(col("w"),
       concat(lit(" "),
         expr("trim(regexp_replace(w, '(.)', '$1  '))"), lit(" ")).as("repr"),
-      col("f")))
+      col("f")).localCheckpoint(true)
     val tops = scala.collection.mutable.ListBuffer.empty[DataFrame]
     for (rank <- 1 to Rounds) {
-      val top = snap(pairCounts(repr)
+      val top = pairCounts(repr)
         .orderBy(col("cnt").desc, col("pair")).limit(1)
         .select(lit(rank).as("merge_rank"), col("pair"),
-          expr("replace(pair, ' ', '')").as("merged"), col("cnt")))
+          expr("replace(pair, ' ', '')").as("merged"), col("cnt"))
+        .localCheckpoint(true)
       tops += top
-      repr = snap(repr
+      repr = repr
         .crossJoin(broadcast(top.select(col("pair").as("mp"))))
         .select(col("w"), expr(
           "replace(repr, ' ' || replace(mp, ' ', '  ') || ' ', ' ' || replace(mp, ' ', '') || ' ')")
-          .as("repr"), col("f")))
+          .as("repr"), col("f"))
+        .localCheckpoint(true)
     }
     b.write("merges", tops.reduce(_ unionAll _))
     b.write("reprs", repr.select(col("w"), col("repr"), col("f"),

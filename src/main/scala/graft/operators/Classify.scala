@@ -197,44 +197,6 @@ object Classify {
     (labeled, toks)
   }
 
-  /** Per-doc join of both students' held-out predictions off ONE
-    * shared teacher/token pass: `(doc_id, actual, nb_pred, rc_pred)`. */
-  def studentPredictions(docs: DataFrame, label: Column,
-                         trainCutBp: Int = 8000,
-                         maxVocab: Int = 256): DataFrame = {
-    val (labeled, toks) = teacherToks(docs, label, trainCutBp)
-    studentPredictionsFrom(labeled, toks, maxVocab)
-  }
-
-  /** [[studentPredictions]] over an already-materialized teacher pass
-    * (`labeled`: doc_id/actual/is_train, `toks`: + token/tcnt) — the
-    * artifact-consumer form (see [[TeacherArtifact]]). */
-  def studentPredictionsFrom(labeled: DataFrame, toks: DataFrame,
-                             maxVocab: Int = 256): DataFrame =
-    nbHeldOutFrom(labeled, toks, maxVocab)
-      .withColumnRenamed("predicted", "nb_pred")
-      .join(rocchioHeldOutFrom(labeled, toks, maxVocab)
-        .withColumnRenamed("predicted", "rc_pred"),
-        Seq("doc_id", "actual"))
-
-  /** [[nbConfusion]] over an already-materialized teacher pass — the
-    * artifact-consumer form (see [[TeacherArtifact]]). */
-  def nbConfusionFrom(labeled: DataFrame, toks: DataFrame,
-                      maxVocab: Int = 256): DataFrame =
-    nbHeldOutFrom(labeled, toks, maxVocab)
-      .groupBy(col("actual"), col("predicted"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("actual"), col("predicted"))
-
-  /** [[rocchioConfusion]] over an already-materialized teacher pass —
-    * the artifact-consumer form (see [[TeacherArtifact]]). */
-  def rocchioConfusionFrom(labeled: DataFrame, toks: DataFrame,
-                           maxVocab: Int = 256): DataFrame =
-    rocchioHeldOutFrom(labeled, toks, maxVocab)
-      .groupBy(col("actual"), col("predicted"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("actual"), col("predicted"))
-
   /** Per-(held-out doc, class) NB scores `(doc_id, actual, label,
     * score)` — every class scored against every eval doc (the frame
     * the argmax, margin, and conformal machinery all read). Scores

@@ -14,7 +14,7 @@ object PairsArtifact {
 
   def apply(threshold: Double, maxDf: Int): Artifact =
     new Artifact("ndpairs", "documents",
-        s"_t${math.round(threshold * 100)}_d$maxDf", Seq("pairs")) {
+        s"_t${math.round(threshold * 100)}_d$maxDf") {
       protected def build(b: Artifact.Build): Unit =
         b.write("pairs", Dedup.jaccardPairs(Tables.documents(b.spark, b.dir),
           threshold, maxDf = Some(maxDf)))
@@ -42,7 +42,7 @@ object ClusterArtifact {
     * → `(doc_id, cluster)`. */
   def apply(threshold: Double, maxDf: Int): Artifact =
     new Artifact("dedupcc", "documents",
-        s"_t${math.round(threshold * 100)}_d$maxDf", Seq("labels")) {
+        s"_t${math.round(threshold * 100)}_d$maxDf") {
       protected def build(b: Artifact.Build): Unit =
         b.write("labels", Clusters.connectedComponents(
           PairsArtifact.pairs(b.spark, b.dir, threshold, maxDf)

@@ -22,16 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Spread a (possibly single-split) input across the cluster before a
-    * compute-heavy per-row stage — see [[Partitioning.spreadBy]]: only
-    * redistributes when planned parallelism is below the cluster's, so
-    * a many-split corpus at scale skips the extra shuffle. */
-  private def spread(df: DataFrame, key: String): DataFrame =
-    Partitioning.spreadBy(df, key)
-
   /** Distinct shingles per document: `(doc_id, shingle)`. */
   def docShingles(documents: DataFrame, n: Int = 5): DataFrame =
-    spread(documents, "doc_id").select(col("doc_id"),
+    Partitioning.spreadBy(documents, "doc_id").select(col("doc_id"),
       explode(array_distinct(TextAnalysis.shingles(col("text"), n))).as("shingle"))
 
   /** Exact + canonical-form duplication stats (single row): total docs,
@@ -340,7 +333,7 @@ object Dedup {
     // null-text docs drop (not null-hash): the aggregate twin and the
     // oracle both lose such docs at explode/unnest, and a null key
     // must not enter the block joins
-    spread(documents, "doc_id").filter(col("text").isNotNull)
+    Partitioning.spreadBy(documents, "doc_id").filter(col("text").isNotNull)
       .select(col("doc_id"),
         graft.functions.TextExpressions.simhash64(col("text")).as("sh"))
 
@@ -361,7 +354,7 @@ object Dedup {
     val value = (0 until SimhashBits).map(i =>
       when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L)))
       .reduce(_ bitwiseOR _)
-    spread(documents, "doc_id")
+    Partitioning.spreadBy(documents, "doc_id")
       .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
       .select(col("doc_id"), md5(col("tok")).as("hx"))
       .select(col("doc_id") +: chunks: _*)
@@ -441,7 +434,7 @@ object Dedup {
   def duplicatedSpans(documents: DataFrame, n: Int = 10,
                       minDf: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pos = spread(documents, "doc_id").select(col("doc_id"),
+    val pos = Partitioning.spreadBy(documents, "doc_id").select(col("doc_id"),
       posexplode(TextAnalysis.shingles(col("text"), n))
         .as(Seq("pos", "shingle")))
     val w = Window.partitionBy(col("shingle"))

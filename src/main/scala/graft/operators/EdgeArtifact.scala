@@ -17,8 +17,7 @@ import graft.Tables
   * instead of the fact table. `q_graph_edges_build` is the registered
   * build step and carries the build cost.
   */
-object EdgeArtifact extends Artifact("cooccur", "lineitem", "",
-    Seq("edges", "freq", "meta")) {
+object EdgeArtifact extends Artifact("cooccur", "lineitem", "") {
 
   /** The edge-list plan over the (persisted) basket-array table: pairs
     * are generated IN-ROW from each order's sorted part array (i < j

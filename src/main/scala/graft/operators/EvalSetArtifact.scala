@@ -11,8 +11,7 @@ import graft.Tables
   * suite and shipped to every screening job, never re-shingled inside
   * each query. `q_eval_shingles_build` is the registered build step;
   * `q_contamination` and `q_corpus_prep` consume the artifact. */
-object EvalSetArtifact extends Artifact("evalsh", "documents", "",
-    Seq("shingles")) {
+object EvalSetArtifact extends Artifact("evalsh", "documents", "") {
 
   protected def build(b: Artifact.Build): Unit = {
     b.write("shingles", Dedup.docShingles(

@@ -22,8 +22,7 @@ import graft.Tables
   * is the production posture: blocking is the corpus-sized pass, paid
   * once; every linkage scorer downstream reads the (near-dup-sparse)
   * candidate table. */
-object HeadPairsArtifact extends Artifact("headpairs", "documents", "",
-    Seq("pairs")) {
+object HeadPairsArtifact extends Artifact("headpairs", "documents", "") {
 
   private def candPlan(spark: SparkSession, dir: String): DataFrame = {
     val keyed = Tables.documents(spark, dir)

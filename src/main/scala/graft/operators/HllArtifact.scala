@@ -18,8 +18,7 @@ import graft.Tables
   * written registers for its pure union/intersection algebra. The
   * artifact is ≤ sources × 256 rows — trivially broadcastable, the
   * whole point of the sketch. */
-object HllArtifact extends Artifact("hllregs", "documents", "_sh5",
-    Seq("regs")) {
+object HllArtifact extends Artifact("hllregs", "documents", "_sh5") {
 
   protected def build(b: Artifact.Build): Unit = {
     val sh = Tables.documents(b.spark, b.dir)

@@ -15,8 +15,7 @@ object IvfArtifact {
   /** Lloyd-refined centroids `(cell, cvec, cnrm)` and the inverted
     * list `(vec_id, cell, embedding, nrm)`. */
   def apply(numCentroids: Int, iterations: Int): Artifact =
-    new Artifact("ivf", "embeddings", s"_c${numCentroids}_i$iterations",
-        Seq("centroids", "inverted")) {
+    new Artifact("ivf", "embeddings", s"_c${numCentroids}_i$iterations") {
       protected def build(b: Artifact.Build): Unit = {
         val (cents, inverted) = Similarity.ivfIndex(
           Tables.embeddings(b.spark, b.dir), numCentroids, iterations)
@@ -27,28 +26,14 @@ object IvfArtifact {
 
   /** Corpus-sized centroid count — the standard IVF sizing rule
     * C ∝ √N (cells and per-cell list lengths grow together, so probe
-    * cost stays ~√N either way), clamped to [8, 4096]. One knob: the
-    * production entry points below derive C from the corpus instead
-    * of taking a literal, and `IvfRecallSpec` holds the recall@5
-    * contract at two scale factors so a resize can never silently
-    * trade recall away. The registry verify queries still pin C = 8:
-    * their DuckDB oracles replay the exact integer-quantized k-means,
-    * so the constant must appear verbatim in both engines' text. */
+    * cost stays ~√N either way), clamped to [8, 4096]. `IvfRecallSpec`
+    * holds the recall@5 contract for C sized by this rule at two scale
+    * factors, so a resize can never silently trade recall away. The
+    * registry verify queries pin C = 8: their DuckDB oracles replay
+    * the exact integer-quantized k-means, so the constant must appear
+    * verbatim in both engines' text. */
   def autoCentroids(n: Long): Int =
     math.max(8, math.min(4096, math.round(math.sqrt(n.toDouble)).toInt))
-
-  /** The auto-sized C for this corpus (one count, scan-only). */
-  def autoFor(spark: SparkSession, dir: String): Int =
-    autoCentroids(Tables.embeddings(spark, dir).count())
-
-  /** Auto-sized index accessors — C = [[autoCentroids]](corpus size). */
-  def centroidsAuto(spark: SparkSession, dir: String,
-                    iterations: Int = 2): DataFrame =
-    centroids(spark, dir, autoFor(spark, dir), iterations)
-
-  def invertedAuto(spark: SparkSession, dir: String,
-                   iterations: Int = 2): DataFrame =
-    inverted(spark, dir, autoFor(spark, dir), iterations)
 
   def centroids(spark: SparkSession, dir: String,
                 numCentroids: Int, iterations: Int): DataFrame =

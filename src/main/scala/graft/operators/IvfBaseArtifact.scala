@@ -17,15 +17,14 @@ import graft.Tables
   *  - `meta`:      (m, n_all) — batch boundary and corpus size.
   *
   * Deterministic pure function of the embeddings table (the
-  * [[Similarity.lloydCentroids]] integer-quantized means); the
+  * [[Similarity.lloydFromCorpus]] integer-quantized means); the
   * consumer reads byte-identical centroids to what it previously
   * trained inline, its DuckDB oracle still replays the full Lloyd
   * loop from `embeddings`, and [[StoredDerivationSpec]] pins
   * artifact-vs-direct manifest identity. */
 object IvfBaseArtifact extends Artifact("ivfbase", "embeddings",
     s"_c${IvfBaseArtifact.NumCentroids}_i${IvfBaseArtifact.Iterations}" +
-    s"_n${IvfBaseArtifact.BatchN}",
-    Seq("centroids", "meta")) {
+    s"_n${IvfBaseArtifact.BatchN}") {
 
   final val NumCentroids = 8
   final val Iterations = 2

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * inverted list ([[IvfArtifact]]); parameters are pinned in the path
   * so a config change can never serve a mismatched graph. */
 object KnnEdgesArtifact extends Artifact("knnedges", "embeddings",
-    s"_c8_i2_k${KnnEdgesArtifact.K}", Seq("edges")) {
+    s"_c8_i2_k${KnnEdgesArtifact.K}") {
 
   /** Largest neighbor count any registry consumer reads. */
   final val K = 5

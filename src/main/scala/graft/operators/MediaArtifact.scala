@@ -24,7 +24,7 @@ import graft.Tables
   * [[Multimodal.wrapWithHeader]]).
   */
 object MediaArtifact extends Artifact(
-    s"media_v${MediaArtifact.LayoutVersion}", "documents", "", Seq("media")) {
+    s"media_v${MediaArtifact.LayoutVersion}", "documents", "") {
 
   final case class MediaRow(
       id: Long, mime: String, n_bytes: Long, media: Array[Byte], format: String)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a config change can never serve a mismatched graph. */
 object NndGraphArtifact extends Artifact("nndgraph", "embeddings",
     s"_k${NndGraphArtifact.K}_r${NndGraphArtifact.Rounds}" +
-    s"_s${NndGraphArtifact.ScatterDegree}", Seq("edges")) {
+    s"_s${NndGraphArtifact.ScatterDegree}") {
 
   /** Graph degree (rank-prefix consumers read k' <= K). */
   final val K = 10

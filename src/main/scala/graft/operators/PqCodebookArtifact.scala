@@ -27,7 +27,7 @@ import graft.Tables
 object PqCodebookArtifact {
 
   def apply(iterations: Int): Artifact =
-    new Artifact("pqcb", "embeddings", s"_i$iterations", Seq("codebook")) {
+    new Artifact("pqcb", "embeddings", s"_i$iterations") {
       protected def build(b: Artifact.Build): Unit =
         b.write("codebook", Similarity.pqCodebookRefined(
           Tables.embeddings(b.spark, b.dir), iterations))

@@ -28,8 +28,7 @@ import graft.Tables
   * exactly the production posture: the duel matrix is
   * vocabulary-sized (items²), the one corpus pass that builds it is
   * paid once, and every audit query downstream is matrix-sized. */
-object PrefDuelArtifact extends Artifact("prefduel", "events", "",
-    Seq("wins", "fit")) {
+object PrefDuelArtifact extends Artifact("prefduel", "events", "") {
 
   val Iters = 2
 

@@ -27,8 +27,7 @@ import graft.Tables
   * the profile is users-sized, the corpus passes that build it are
   * paid once, and every release-audit query downstream is
   * group-histogram-sized. */
-object ProfileArtifact extends Artifact("profile", "events", "",
-    Seq("profile")) {
+object ProfileArtifact extends Artifact("profile", "events", "") {
 
   /** Engine-side profile derivation (moved verbatim from
     * `PrivacyQueries.profile`): per (user, type, day) counts+cents,

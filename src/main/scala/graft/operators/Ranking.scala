@@ -28,13 +28,10 @@ import org.apache.spark.sql.functions._
   */
 object Ranking {
 
-  private def spread(df: DataFrame): DataFrame =
-    Partitioning.spreadBy(df, "doc_id")
-
   /** `(doc_id, dl, term, tf)` — per-document term frequencies with the
     * document token length carried along. */
   def termFreqs(documents: DataFrame): DataFrame =
-    spread(documents)
+    Partitioning.spreadBy(documents, "doc_id")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).as("dl"),
         explode(col("toks")).as("term"))
@@ -103,7 +100,7 @@ object Ranking {
     val tf = termFreqs(documents)
       .filter(col("term").isin(queryTerms.map(x => x: Any): _*))
     val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = spread(documents)
+    val stats = Partitioning.spreadBy(documents, "doc_id")
       .select(size(TextAnalysis.tokens(col("text"))).as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val idf = ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /

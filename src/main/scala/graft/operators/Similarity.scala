@@ -87,13 +87,6 @@ object Similarity {
         (col("pos") + 1).cast("int").as(rankName))
       .orderBy(col("qid"), col(rankName))
 
-  /** Decouple CPU parallelism from input file splits (the embeddings
-    * table is one small file = one partition, but the pair loops it
-    * feeds are the most compute-intense stages in the engine) — see
-    * [[Partitioning.spreadBy]] for the at-scale no-op contract. */
-  private def spread(df: DataFrame): DataFrame =
-    Partitioning.spreadBy(df, "vec_id")
-
   /** Brute-force cosine top-k: for each query vector, the k nearest
     * corpus vectors by (cosine desc, vec_id asc). The query side is
     * tiny — broadcast it so the corpus never shuffles. */
@@ -102,7 +95,8 @@ object Similarity {
       embeddings.filter(col("vec_id") < queryMaxId)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
           norm(col("embedding")).as("qnrm")))
-    val corpus = spread(embeddings.filter(col("vec_id") >= queryMaxId))
+    val corpus = Partitioning.spreadBy(
+      embeddings.filter(col("vec_id") >= queryMaxId), "vec_id")
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
     val scored = corpus.crossJoin(queries)
       .select(col("qid"), col("vec_id"),
@@ -113,7 +107,7 @@ object Similarity {
   /** Corpus prepared for IVF work: spread across the cluster with the
     * norm computed once. */
   private def prepared(embeddings: DataFrame): DataFrame =
-    spread(embeddings)
+    Partitioning.spreadBy(embeddings, "vec_id")
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
 
   /** Initial IVF centroids: the first C corpus vectors — deterministic
@@ -222,17 +216,11 @@ object Similarity {
     * Scale shape per iteration: assignment is the broadcast-join
     * aggregate of [[assignCells]]; the mean is a `posexplode` (n×dim
     * rows) into a (cell, pos) hash aggregate — map-side combinable,
-    * one shuffle of C×dim partial sums. Empty cells drop out. */
-  def lloydCentroids(embeddings: DataFrame, numCentroids: Int,
-                     iterations: Int): DataFrame =
-    lloydFromCorpus(
-      prepared(embeddings)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      numCentroids, iterations)
-
-  /** Lloyd loop over an already-prepared (and ideally persisted)
-    * corpus — lets callers that also consume the corpus share one
-    * cached copy instead of re-reading and re-norming it. */
+    * one shuffle of C×dim partial sums. Empty cells drop out.
+    *
+    * Runs over an already-prepared (and ideally persisted) corpus, so
+    * callers that also consume the corpus share one cached copy
+    * instead of re-reading and re-norming it. */
   private def lloydFromCorpus(corpus: DataFrame, numCentroids: Int,
                               iterations: Int): DataFrame = {
     var cents = initialCentroids(corpus, numCentroids)
@@ -263,16 +251,6 @@ object Similarity {
                                   iterations: Int): DataFrame =
     if (iterations > 0) lloydFromCorpus(corpus, numCentroids, iterations)
     else initialCentroids(corpus, numCentroids)
-
-  /** IVF centroids: first-C seeding, optionally Lloyd-refined. */
-  def ivfCentroids(embeddings: DataFrame, numCentroids: Int,
-                   iterations: Int = 0): DataFrame = {
-    val corpus =
-      if (iterations > 0) prepared(embeddings)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else prepared(embeddings)
-    centroidsFromCorpus(corpus, numCentroids, iterations)
-  }
 
   /** IVF-style cell assignment: every vector lands in the cell of its
     * nearest centroid (cosine, ties to the lower cell id). Returns
@@ -407,8 +385,8 @@ object Similarity {
     * compared (the blocking key stands in for an LSH bucket at scale),
     * keeping the pair count linear in block sizes instead of n². */
   def blockedNearDupPairs(embeddings: DataFrame, minCos: Double): DataFrame = {
-    val e = spread(embeddings).select(col("vec_id"), col("label"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
+    val e = Partitioning.spreadBy(embeddings, "vec_id").select(col("vec_id"),
+      col("label"), col("embedding"), norm(col("embedding")).as("nrm"))
     e.as("a").join(e.as("b"),
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
@@ -430,8 +408,8 @@ object Similarity {
     * `keep` marks the pair's lower vec_id as the retained exemplar. */
   def cellBlockedNearDupPairs(embeddings: DataFrame, numCentroids: Int,
                               minCos: Double): DataFrame = {
-    val e = spread(embeddings).select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
+    val e = Partitioning.spreadBy(embeddings, "vec_id").select(col("vec_id"),
+      col("embedding"), norm(col("embedding")).as("nrm"))
     val cells = ivfAssign(embeddings, numCentroids)
     // persist before the self-join: without it each join side re-runs
     // the centroid-assignment subtree (broadcast score + per-vector
@@ -492,7 +470,7 @@ object Similarity {
                       dim: Int = 64): DataFrame = {
     require(planes % bandBits == 0, "planes must be a multiple of bandBits")
     val nBands = planes / bandBits
-    val e = spread(embeddings)
+    val e = Partitioning.spreadBy(embeddings, "vec_id")
     val bits = srpBits(col("embedding"), planes, dim)
     val bandCols = (0 until nBands).map { b =>
       val bval = (0 until bandBits)
@@ -553,7 +531,7 @@ object Similarity {
     * [[knnBruteForce]], same broadcast-query / partitioned-corpus plan,
     * but scoring 8-bit integer dots instead of float dots. */
   def knnQuantized(embeddings: DataFrame, queryMaxId: Long, k: Int): DataFrame = {
-    val quantized = spread(embeddings)
+    val quantized = Partitioning.spreadBy(embeddings, "vec_id")
       .select(col("vec_id"), quantizeInt8(col("embedding")).as("q"))
       .select(col("vec_id"), col("q"), sqrt(intDot(col("q"), col("q"))).as("qnrm"))
     val queries = broadcast(quantized.filter(col("vec_id") < queryMaxId)
@@ -613,7 +591,7 @@ object Similarity {
 
   /** Per-subspace Lloyd refinement of the PQ codebooks — k-means in
     * each 8-dim subspace, exactly the determinism contract of
-    * [[lloydCentroids]]: each iteration reassigns every subvector to
+    * [[lloydFromCorpus]]: each iteration reassigns every subvector to
     * its nearest codeword (L2 in fixed-order double, ties to the lower
     * codeword index), then replaces each codeword with its members'
     * mean over integer-millionth-quantized components, cast to float —
@@ -626,7 +604,7 @@ object Similarity {
     * aggregate — map-side combinable, one shuffle of
     * NumSub×NumCodes×SubDim partial sums. */
   def pqCodebookRefined(embeddings: DataFrame, iterations: Int): DataFrame = {
-    val subs = spread(embeddings)
+    val subs = Partitioning.spreadBy(embeddings, "vec_id")
       .select(col("vec_id"), subVectors(col("embedding")).as("e"))
       .select(col("vec_id"), col("e.sub").as("sub"), col("e.svec").as("svec"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -709,7 +687,8 @@ object Similarity {
     * (a NumSub×NumCodes parquet read), so nothing here persists. */
   def pqSearchWith(embeddings: DataFrame, cb: DataFrame, queryMaxId: Long,
                    corpusMinId: Long, k: Int): DataFrame = {
-    val enc = pqEncode(spread(embeddings.filter(col("vec_id") >= corpusMinId)), cb)
+    val enc = pqEncode(Partitioning.spreadBy(
+      embeddings.filter(col("vec_id") >= corpusMinId), "vec_id"), cb)
     val lut = embeddings.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("qid"), subVectors(col("embedding")).as("e"))
       .select(col("qid"), col("e.sub").as("sub"), col("e.svec").as("qvec"))
@@ -840,7 +819,8 @@ object Similarity {
       embeddings.filter(col("vec_id") < queryMaxId)
         .select(col("vec_id").as("qid"), col("label").as("qlabel"),
           col("embedding").as("qvec"), norm(col("embedding")).as("qnrm")))
-    val corpus = spread(embeddings.filter(col("vec_id") >= queryMaxId))
+    val corpus = Partitioning.spreadBy(
+      embeddings.filter(col("vec_id") >= queryMaxId), "vec_id")
       .select(col("vec_id"), col("label"), col("embedding"),
         norm(col("embedding")).as("nrm"))
     val scored = corpus.crossJoin(queries)
@@ -910,7 +890,7 @@ object Similarity {
 
   /** Per-label centroid drift against the global corpus centroid:
     * each label's mean vector (components quantized to integer
-    * millionths exactly as [[lloydCentroids]] — order-independent
+    * millionths exactly as [[lloydFromCorpus]] — order-independent
     * BIGINT sums, one double division, cast to float) cosine-compared
     * to the all-corpus mean. The mixture-monitoring diagnostic for
     * embedding corpora: a label whose centroid drifts from the global
@@ -918,7 +898,7 @@ object Similarity {
     * aggregate (n×dim rows, map-side combinable) computes BOTH
     * centroids; everything downstream is label-count sized. */
   def centroidDrift(embeddings: DataFrame): DataFrame = {
-    val quantized = spread(embeddings)
+    val quantized = Partitioning.spreadBy(embeddings, "vec_id")
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("label"), col("pos"),
         floor(col("v").cast("double") * lit(1000000d) + lit(0.5)).as("qv"))
@@ -956,7 +936,7 @@ object Similarity {
     * exact-commutative. One corpus scan for the centroids, one for
     * the scoring — nothing wider than L ever shuffles. */
   def labelSilhouette(embeddings: DataFrame): DataFrame = {
-    val quantized = spread(embeddings)
+    val quantized = Partitioning.spreadBy(embeddings, "vec_id")
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("label"), col("pos"),
         floor(col("v").cast("double") * lit(1000000d) + lit(0.5)).as("qv"))
@@ -967,7 +947,8 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         e => e.getField("m")).as("cvec"))
       .withColumnRenamed("label", "clabel")
-    val scored = spread(embeddings).crossJoin(broadcast(centroids))
+    val scored = Partitioning.spreadBy(embeddings, "vec_id")
+      .crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("label"),
         when(col("label") === col("clabel"), cosine(col("embedding"), col("cvec")))
           .as("own_cos"),
@@ -1258,8 +1239,6 @@ object Similarity {
     * references every hop's candidates — truncated lineage keeps plan
     * analysis O(1) per hop and leaves no persist bookkeeping behind
     * (serving calls this once per micro-batch). */
-  private def snapshot(df: DataFrame): DataFrame = Frames.snapshot(df)
-
   private def beamWalk(corpus: DataFrame, bsym: DataFrame,
       queries: DataFrame, k: Int, beam: Int, hops: Int,
       entry: Long,
@@ -1291,7 +1270,7 @@ object Similarity {
     // checkpoint gives it fresh attribute ids when the query side
     // comes from a streaming micro-batch
     var frontier = queries.select(col("qid"), lit(entry).as("node"))
-      .transform(snapshot)
+      .localCheckpoint(true)
     // `seen` accumulates as a lazy unionAll; ONE distinct before the
     // final scoring (a per-hop distinct on it is shuffle-count waste —
     // the frontier cut is what needs dedup, and cand has its own)
@@ -1318,7 +1297,7 @@ object Similarity {
         .filter(col("dst") =!= col("qid"))
         .select(col("qid").as("qid"), col("dst").as("node"))
         .distinct()
-        .transform(snapshot)
+        .localCheckpoint(true)
       audit.foreach(_ += cand) // checkpointed — counting it later is free
       seen = seen.unionAll(cand)
       frontier = score(cand)
@@ -1735,7 +1714,8 @@ object Similarity {
     val queries = broadcast(embeddings.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"),
         col("embedding").as("qvec"), norm(col("embedding")).as("qnrm")))
-    val train = spread(embeddings.filter(col("vec_id") >= queryMaxId))
+    val train = Partitioning.spreadBy(
+      embeddings.filter(col("vec_id") >= queryMaxId), "vec_id")
       .select(col("vec_id"), col("label"), col("embedding"),
         norm(col("embedding")).as("nrm"))
     val scored = train.crossJoin(queries)

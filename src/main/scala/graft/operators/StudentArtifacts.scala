@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[TeacherArtifact]], plus the fixed task parameters.
   */
 object NbScoresArtifact extends Artifact("nbscores", "documents",
-    s"_bp${TeacherArtifact.trainCutBp}_v256", Seq("scores")) {
+    s"_bp${TeacherArtifact.trainCutBp}_v256") {
 
   /** Every held-out doc scored against every class under the NB model
     * trained on the teacher artifact's train slice:
@@ -41,7 +41,7 @@ object NbScoresArtifact extends Artifact("nbscores", "documents",
   * held-out slice, fallback class already applied — see
   * [[NbScoresArtifact]] for the tier's contract. */
 object RocchioPredsArtifact extends Artifact("rcpreds", "documents",
-    s"_bp${TeacherArtifact.trainCutBp}_v256", Seq("preds")) {
+    s"_bp${TeacherArtifact.trainCutBp}_v256") {
 
   protected def build(b: Artifact.Build): Unit = {
     b.write("preds", Classify.rocchioHeldOutFrom(

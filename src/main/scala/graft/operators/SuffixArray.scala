@@ -618,7 +618,7 @@ object SuffixArray {
   }
 
   def longestRepeatedStrided(last: DataFrame, blockText: DataFrame,
-      window: Int, stride: Int): DataFrame = {
+      stride: Int): DataFrame = {
     val sa = stridedSa(last, blockText, stride)
 
     // per final rank: distinct global members (sorted), one

@@ -53,8 +53,7 @@ object StridedSuffixArtifact extends Artifact("suffixstrided", "documents",
     // BlockBase is part of the key: stored bids are base-dependent, so
     // a base change must never serve a stale table
     s"_w${StridedSuffixArtifact.Window}_s${StridedSuffixArtifact.Stride}" +
-    s"_b${SuffixArray.BlockBase}",
-    Seq(s"level_${SuffixArtifact.Rounds}", "plain_dense")) {
+    s"_b${SuffixArray.BlockBase}") {
 
   final val Window = SuffixArtifact.MaxLen
   final val Stride = Window / 2
@@ -101,13 +100,13 @@ object StridedSuffixArtifact extends Artifact("suffixstrided", "documents",
   * IVF → kNN-edges → NN-descent chain applied to the suffix family. */
 object StridedLrsPairsArtifact extends Artifact("suffixpairs", "documents",
     s"_w${StridedSuffixArtifact.Window}_s${StridedSuffixArtifact.Stride}" +
-    s"_b${SuffixArray.BlockBase}", Seq("pairs")) {
+    s"_b${SuffixArray.BlockBase}") {
 
   protected def build(b: Artifact.Build): Unit = {
     b.write("pairs", SuffixArray.longestRepeatedStrided(
       StridedSuffixArtifact.last(b.spark, b.dir),
       StridedSuffixArtifact.blockText(b.spark, b.dir),
-      StridedSuffixArtifact.Window, StridedSuffixArtifact.Stride))
+      StridedSuffixArtifact.Stride))
   }
 
   /** The stored pair table. */
@@ -122,7 +121,7 @@ object StridedLrsPairsArtifact extends Artifact("suffixpairs", "documents",
   * pass is paid once by the registered build step and the query reads
   * the pair table. */
 object PlainLrsPairsArtifact extends Artifact("suffixplainpairs", "documents",
-    s"_w${SuffixArtifact.MaxLen}", Seq("pairs")) {
+    s"_w${SuffixArtifact.MaxLen}") {
 
   protected def build(b: Artifact.Build): Unit = {
     b.write("pairs", SuffixArray.longestRepeated(

@@ -22,7 +22,7 @@ import graft.Tables
   * other two students consume the written tables.
   */
 object TeacherArtifact extends Artifact("teacher", "documents",
-    s"_profile_bp${TeacherArtifact.trainCutBp}", Seq("labeled", "toks")) {
+    s"_profile_bp${TeacherArtifact.trainCutBp}") {
 
   /** The registry's fixed teacher task: profile labeler, 80/20 split. */
   final val trainCutBp = 8000

@@ -20,8 +20,7 @@ import graft.Tables
   * under the standard `df·10 ≤ n_docs` stop-term cut, so everything
   * downstream of the index is integer arithmetic.
   */
-object TermIndexArtifact extends Artifact("termidx", "documents", "_cap10",
-    Seq("kept", "norms")) {
+object TermIndexArtifact extends Artifact("termidx", "documents", "_cap10") {
 
   /** Two parquet outputs share one persisted posting build:
     *  - kept:  (doc_id, term, w)  — df-capped integer tf-idf postings

@@ -24,8 +24,7 @@ import graft.Tables
   * whitespace tokenization, the label columns simply pruned at the
   * parquet scan).
   */
-object TopicArtifact extends Artifact("topics", "documents", "",
-    Seq("assign", "cent")) {
+object TopicArtifact extends Artifact("topics", "documents", "") {
 
   /** Per-doc full-vocabulary tf vectors `(doc_id, term, w)` — read
     * from the materialized tokenized corpus, never re-exploded. */

@@ -88,27 +88,6 @@ object Unify {
     df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }
 
-  /** G3+G4+G5+G8 — group per (key, bucket); keep only complete groups
-    * (all required types present, `OrderProjection.java:94-96`);
-    * order events by type priority (`OrderProjection.java:74-84`);
-    * assemble the projection payload. Incomplete groups vanish (G8).
-    *
-    * `sort_array` over `struct(priority, event_id, event_type)` sorts
-    * by priority with a unique tiebreak — deterministic. */
-  def assembleProjections(deduped: DataFrame): DataFrame =
-    deduped
-      .groupBy(col("user_id"), col("bucket"))
-      .agg(
-        sort_array(collect_list(struct(
-          col("priority"), col("event_id"), col("event_type")))).as("evs"),
-        countDistinct(col("event_type")).as("n_types"))
-      .filter(col("n_types") === requiredTypes.size)
-      .select(
-        col("user_id"), col("bucket"),
-        concat_ws(",",
-          transform(col("evs"),
-            e => concat_ws(":", e("event_type"), e("event_id")))).as("payload"))
-
   /** The full flagship pipeline: filter → canonicalize → bucket →
     * first-wins dedup → complete-only priority-ordered projection.
     * Exercises S1-S3, P1, P2, U1, G2-G5, G8 in one query (SURVEY.md §7

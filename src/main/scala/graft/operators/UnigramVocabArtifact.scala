@@ -40,15 +40,7 @@ import org.apache.spark.sql.functions._
   * [[MaxLen]] fall outside the tokenizer domain and take the
   * documented one-char-per-piece fallback in the fertility consumer. */
 object UnigramVocabArtifact extends Artifact("unigramvocab", "documents",
-    s"_l${UnigramVocabArtifact.MaxLen}p${UnigramVocabArtifact.PieceMax}",
-    Seq("vocab", "reprs")) {
-
-  // round 13: build-time (batch-only) lineage cut — eager
-  // localCheckpoint keeps internal rows; Frames.snapshot's
-  // external-Row form is only needed under streaming
-  // foreachBatch re-analysis.
-  private def snap(df: org.apache.spark.sql.DataFrame) =
-    df.localCheckpoint(true)
+    s"_l${UnigramVocabArtifact.MaxLen}p${UnigramVocabArtifact.PieceMax}") {
 
   /** DP bound — the longest word the tokenizer segments (corpus max
     * is 8; see the fallback note above). */
@@ -108,7 +100,7 @@ object UnigramVocabArtifact extends Artifact("unigramvocab", "documents",
       .select(col("w"), col("f"),
         size(col("pieces")).cast("long").as("n_pieces"),
         array_join(col("pieces"), " ").as("repr"), col("pieces"))
-    val seg = snap(segmented)
+    val seg = segmented.localCheckpoint(true)
     val usage = seg
       .select(col("f"), explode(col("pieces")).as("piece"))
       .groupBy(col("piece")).agg(sum(col("f")).as("c"))
@@ -122,18 +114,19 @@ object UnigramVocabArtifact extends Artifact("unigramvocab", "documents",
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
     // every candidate piece occurrence, once: both passes join their
     // vocab against this table, and pass-1 scores aggregate from it
-    val ex = snap(words.select(col("w"), col("f"), explode(expr(
+    val ex = words.select(col("w"), col("f"), explode(expr(
         s"""flatten(transform(sequence(1, least(length(w), $PieceMax)),
             L -> transform(sequence(1, length(w) - L + 1),
                            i -> struct(i AS i, L AS l,
                                        substring(w, i, L) AS piece))))"""))
         .as("p"))
       .select(col("w"), col("f"), col("p.i").as("i"), col("p.l").as("l"),
-        col("p.piece").as("piece")))
+        col("p.piece").as("piece"))
+      .localCheckpoint(true)
     // pass-1 scores: raw weighted substring-occurrence counts
     val cand = ex.groupBy(col("piece")).agg(sum(col("f")).as("c"))
     val (_, usage1) = viterbi(ex, cand)
-    val u1 = snap(usage1)
+    val u1 = usage1.localCheckpoint(true)
     // pass-2 scores: hard-EM re-estimation — usage counts; every
     // single char stays in the vocabulary (score 0 if unused) so the
     // DP remains total

@@ -856,12 +856,6 @@ object GraphQueries {
     Q(
       "q_graph_betweenness",
       (spark, dir) => {
-        // round 13: batch-only path, so eager localCheckpoint
-        // replaces Frames.snapshot (which pays an external-Row
-        // conversion; the snapshot form exists for streaming
-        // foreachBatch re-analysis, not needed here)
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.localCheckpoint(true)
         val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val e = edges(spark, dir)
         val sym = e.select(col("pa").as("src"), col("pb").as("dst"))
@@ -872,14 +866,15 @@ object GraphQueries {
           .orderBy(col("degree").desc, col("node")).limit(K)
           .select(col("node").as("s"))
         // forward: per-source BFS layers carrying path counts σ
-        val l0 = snap(seeds.select(col("s"),
-          col("s").as("node"), lit(0).as("dist"), lit(1L).as("sigma")))
+        val l0 = seeds.select(col("s"),
+          col("s").as("node"), lit(0).as("dist"), lit(1L).as("sigma"))
+          .localCheckpoint(true)
         var layers = Vector(l0)
         var frontier = l0
         for (h <- 1 to H) {
           val seen = layers.map(_.select(col("s"), col("node")))
             .reduce(_ unionAll _)
-          val next = snap(
+          val next =
             frontier.join(sym, frontier("node") === sym("src"))
               .select(col("s"), col("dst").as("n2"), col("sigma"))
               .groupBy(col("s"), col("n2"))
@@ -887,7 +882,8 @@ object GraphQueries {
               .join(seen.select(col("s"), col("node").as("n2")),
                 Seq("s", "n2"), "left_anti")
               .select(col("s"), col("n2").as("node"), lit(h).as("dist"),
-                col("sigma")))
+                col("sigma"))
+              .localCheckpoint(true)
           layers = layers :+ next
           frontier = next
         }
@@ -908,11 +904,12 @@ object GraphQueries {
             .select(col("s"), col("v"),
               expr("sv * (1000000 + dw) div sw").as("c"))
             .groupBy(col("s"), col("v")).agg(sum(col("c")).as("d"))
-          val d = snap(
+          val d =
             lv.select(col("s"), col("v"))
               .join(agg, Seq("s", "v"), "left")
               .select(col("s"), col("v").as("node"),
-                coalesce(col("d"), lit(0L)).as("delta_ppm")))
+                coalesce(col("d"), lit(0L)).as("delta_ppm"))
+              .localCheckpoint(true)
           contribs += d
           deltaNext = d
         }

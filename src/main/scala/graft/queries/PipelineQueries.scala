@@ -497,28 +497,24 @@ object PipelineQueries {
     Q(
       "q_unify_event_time",
       (spark, dir) => {
-        // round 13: batch-only path — eager localCheckpoint keeps
-        // internal rows (Frames.snapshot pays an external-Row
-        // conversion; its form is only needed under streaming
-        // foreachBatch re-analysis)
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.localCheckpoint(true)
         val ev = Tables.events(spark, dir)
           .select(col("user_id"), unix_micros(col("ts")).as("tsm"),
             col("event_type"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         ev.count()
-        var cur = snap(
+        var cur =
           ev.groupBy(col("user_id")).agg(min(col("tsm")).as("a"))
-            .withColumn("grp", lit(1)))
+            .withColumn("grp", lit(1))
+            .localCheckpoint(true)
         val anchors = scala.collection.mutable.ListBuffer(cur)
         for (i <- 2 to rounds) {
-          cur = snap(
+          cur =
             ev.join(broadcast(cur.select(col("user_id"), col("a").as("pa"))),
                 "user_id")
               .filter(col("tsm") >= col("pa") + W)
               .groupBy(col("user_id")).agg(min(col("tsm")).as("a"))
-              .withColumn("grp", lit(i)))
+              .withColumn("grp", lit(i))
+              .localCheckpoint(true)
           anchors += cur
         }
         val anch = anchors.reduce(_ unionAll _)

@@ -1287,8 +1287,6 @@ object SequenceQueries {
       }
 
       val seg1 = nRow.select(lit(1).as("level"), lit(1).as("a"), col("n").as("b"))
-      // round 13: batch-only path — eager localCheckpoint instead of
-      // Frames.snapshot (no external-Row conversion needed here)
       val best1 = bestOf(seg1).localCheckpoint(true)
       val seg2 = best1.select(lit(2).as("level"), lit(1).as("a"), col("k").as("b"))
         .unionByName(best1.crossJoin(broadcast(nRow))

@@ -82,7 +82,7 @@ object SimilarityQueries {
        |                        FOR i IN generate_series(1, len($b))]))), 6)""".stripMargin
 
   /** Generated WITH-clause chain replaying
-    * [[Similarity.lloydCentroids]]'s deterministic Lloyd iterations in
+    * [[Similarity.lloydFromCorpus]]'s deterministic Lloyd iterations in
     * DuckDB: assignment by rounded cosine (ties to the lower cell),
     * then the cell mean over integer-millionth-quantized components
     * cast to float — bit-identical centroids on both engines. Ends at
@@ -550,7 +550,7 @@ object SimilarityQueries {
 
   /** Per-label centroid drift vs the global corpus centroid — the
     * embedding-mixture monitor: each label's quantized-integer mean
-    * vector (the [[Similarity.lloydCentroids]] determinism contract)
+    * vector (the [[Similarity.lloydFromCorpus]] determinism contract)
     * cosine-compared to the all-corpus mean. The oracle replays the
     * same quantized means and cosine in SQL. */
   val qEmbedCentroidDrift: Q = Q(

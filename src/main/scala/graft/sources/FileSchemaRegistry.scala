@@ -160,20 +160,27 @@ object FileSchemaRegistry {
       records: Seq[(String, String)]): (Int, Int) = {
     val schema = latest(registryRoot, subject).getOrElse(
       throw new IllegalStateException(s"no schema registered for $subject"))
+    val (good, rejected) = splitValid(spark, records, schema.doc)
+    FileTopics.append(topicsRoot, topic, numPartitions, good)
+    (good.length, rejected)
+  }
+
+  /** The producer-side validity split shared by both registry
+    * producers: `records` whose value `doc` accepts, in input order,
+    * and the count of rejected ones. The records Seq is DRIVER-LOCAL
+    * by construction (the producer seam — the data starts here,
+    * exactly like a Kafka producer's send buffer); the collect
+    * round-trips the bounded batch through the codegen'd validity
+    * predicate, it does not pull distributed data to the driver. */
+  private[sources] def splitValid(spark: org.apache.spark.sql.SparkSession,
+      records: Seq[(String, String)], doc: String): (Seq[(String, String)], Int) = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    // the records Seq is DRIVER-LOCAL by construction (this is the
-    // producer seam — the data starts here, exactly like a Kafka
-    // producer's send buffer); the collect round-trips the bounded
-    // batch through the codegen'd validity predicate, it does not
-    // pull distributed data to the driver
     val flags = records.toDF("key", "value")
       .select(col("key"), col("value"),
-        JsonSchema.isValid(col("value"), schema.doc).as("ok"))
+        JsonSchema.isValid(col("value"), doc).as("ok"))
       .collect()
     val (good, bad) = flags.partition(_.getBoolean(2))
-    FileTopics.append(topicsRoot, topic, numPartitions,
-      good.toSeq.map(r => (r.getString(0), r.getString(1))))
-    (good.length, bad.length)
+    (good.toSeq.map(r => (r.getString(0), r.getString(1))), bad.length)
   }
 }

@@ -58,19 +58,13 @@ object HttpSchemaRegistry {
       numPartitions: Int, subject: String,
       records: Seq[(String, String)]): (Int, Int, Int) = {
     val (_, schemaId, doc) = client.latest(subject)
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val flags = records.toDF("key", "value")
-      .select(col("key"), col("value"),
-        JsonSchema.isValid(col("value"), doc).as("ok"))
-      .collect()
-    val (good, bad) = flags.partition(_.getBoolean(2))
+    val (good, rejected) = FileSchemaRegistry.splitValid(spark, records, doc)
     FileTopics.append(topicsRoot, topic, numPartitions,
-      good.toSeq.map { r =>
-        (r.getString(0), java.util.Base64.getEncoder.encodeToString(
-          SchemaRegistryWire.encode(schemaId, r.getString(1))))
+      good.map { case (k, v) =>
+        (k, java.util.Base64.getEncoder.encodeToString(
+          SchemaRegistryWire.encode(schemaId, v)))
       })
-    (schemaId, good.length, bad.length)
+    (schemaId, good.length, rejected)
   }
 
   /** Registry-aware CONSUMER, the data-plane half: a DISTRIBUTED scan

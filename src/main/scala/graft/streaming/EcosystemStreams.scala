@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference ecosystem's secondary streaming surfaces (SURVEY.md
@@ -34,17 +34,10 @@ object EcosystemStreams {
     df.withColumn("topic", routeExpr)
 
   /** X1 — the Bloblang fake-profile generator
-    * (`docker-compose/generate-profiles.yaml:1-52`): 1 row/sec of
-    * deterministic fake profiles with the nested `preferences` struct.
-    * Streaming: rate source; batch analog: `spark.range` (see
-    * q_synth_gen). */
-  def profileStream(spark: SparkSession, rowsPerSecond: Int = 1): DataFrame =
-    fakeProfiles(spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-      .select(col("value").as("id"), col("timestamp")))
-
-  /** Deterministic fake-profile columns from a numeric id — shared by
-    * the rate-source stream and the batch generator. */
+    * (`docker-compose/generate-profiles.yaml:1-52`): deterministic fake
+    * profiles with the nested `preferences` struct, one per numeric
+    * `id` — from `spark.range` in batch or a `rate` source's `value`
+    * column as a stream. */
   def fakeProfiles(ids: DataFrame): DataFrame = {
     val id = col("id")
     val pick = (xs: Seq[String], m: Int) =>

@@ -46,7 +46,7 @@ class ArtifactRuntimeSpec extends AnyFunSuite {
   test("concurrent reads of one spec build it once") {
     val dir = tmp("artconc")
     val builds = new AtomicInteger()
-    val spec = new Artifact("conc", "t", "", Seq("p")) {
+    val spec = new Artifact("conc", "t", "") {
       protected def build(b: Artifact.Build): Unit = {
         builds.incrementAndGet()
         Thread.sleep(300) // keep the build open while the others arrive
@@ -73,7 +73,7 @@ class ArtifactRuntimeSpec extends AnyFunSuite {
   test("a build that throws rethrows, stays incomplete, and is retried") {
     val dir = tmp("artfail")
     val builds = new AtomicInteger()
-    val spec = new Artifact("fail", "t", "", Seq("p", "q")) {
+    val spec = new Artifact("fail", "t", "") {
       protected def build(b: Artifact.Build): Unit = {
         b.write("p", b.spark.range(3).toDF("id"))
         if (builds.incrementAndGet() == 1) sys.error("boom")

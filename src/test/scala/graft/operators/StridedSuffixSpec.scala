@@ -28,7 +28,7 @@ class StridedSuffixSpec extends AnyFunSuite {
     val df = docs.toDF("doc_id", "text")
     val blk = SuffixArray.blocks(df, w, s)
     val last = SuffixArray.rankLevels(blk, w).last
-    SuffixArray.longestRepeatedStrided(last, blk, w, s)
+    SuffixArray.longestRepeatedStrided(last, blk, s)
       .select("doc_a", "pos_a", "doc_b", "pos_b", "lcp").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq

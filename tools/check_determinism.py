@@ -6,20 +6,32 @@ the driver's column-name sort). Byte-compare is too strict across runs
 task scheduling); what must hold is typed-value identity, which is
 also exactly what the driver hashes.  Usage:
     python3 tools/check_determinism.py [sfDir]
+
+sbt runs in the checkout that holds this script. Each Verify JVM gets
+its own fresh, empty java.io.tmpdir under its output directory, so both
+runs build every artifact from the parquet inputs: a shared artifact
+root would let the second run read the first run's builds and hide any
+nondeterminism in them.
 """
-import subprocess, sys
+import shutil, subprocess, sys
 from pathlib import Path
 
 import pyarrow.parquet as pq
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUTS = ["/tmp/graft_det_a", "/tmp/graft_det_b"]
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def run_verify(out):
+    shutil.rmtree(out, ignore_errors=True)
+    tmp = Path(out) / "_tmpdir"
+    tmp.mkdir(parents=True)
     r = subprocess.run(
-        ["sbt", "--batch", f"runMain graft.Verify {SF_DIR} {out}"],
-        cwd="/root/repo", capture_output=True, text=True)
+        ["sbt", "--batch",
+         f'set javaOptions += "-Djava.io.tmpdir={tmp}"',
+         f"runMain graft.Verify {SF_DIR} {out}"],
+        cwd=ROOT, capture_output=True, text=True)
     if r.returncode != 0:
         print("\n".join((r.stdout + r.stderr).splitlines()[-20:]))
         sys.exit(f"verify failed rc={r.returncode}")
@@ -28,8 +40,10 @@ def run_verify(out):
 def main():
     for out in OUTS:
         run_verify(out)
-    a_dirs = {p.name for p in Path(OUTS[0]).iterdir() if p.is_dir()}
-    b_dirs = {p.name for p in Path(OUTS[1]).iterdir() if p.is_dir()}
+    a_dirs = {p.name for p in Path(OUTS[0]).iterdir()
+              if p.is_dir() and p.name != "_tmpdir"}
+    b_dirs = {p.name for p in Path(OUTS[1]).iterdir()
+              if p.is_dir() and p.name != "_tmpdir"}
     if a_dirs != b_dirs:
         sys.exit(f"query sets differ: {a_dirs ^ b_dirs}")
     n_fail = 0
